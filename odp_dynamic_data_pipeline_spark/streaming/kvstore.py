@@ -10,10 +10,13 @@ file):
   maintained views),
 - ``run_incremental_sessions`` (open-session state + event-time
   high-water mark),
-- ``run_incremental_upsert`` (CDC last-wins table).
+- ``run_incremental_upsert`` (CDC last-wins table),
+- ``run_incremental_cc`` (node -> component labels; the remap chain
+  rides the manifest's extras lines).
 
 The families differ ONLY in their merge function (refold counts / walk
-sessions / max-by-seq) and in what extra metadata the manifest carries;
+sessions / max-by-seq / min-label merge) and in what extra metadata the
+manifest carries;
 everything below -- manifest parse, atomic flip, fresh-version election,
 retry base resolution, bucket-path resolution, vacuum retention -- is
 identical, and lives here exactly once so a new store family inherits
@@ -52,6 +55,15 @@ latest flip is never stranded -- folds only ever ADD directories, so a
 reader may overlap any number of subsequent folds; it must only not
 straddle a LATER vacuum (ops rule: drain readers before vacuuming, the
 same rule Delta's VACUUM retention window encodes).
+
+The APPEND-ONLY batch-keyed stores (dedup fingerprints, neardup / hamming
+band indexes, spans window counts, ivf / semdedup vectors, kmv mins) need
+no manifest: each micro-batch overwrites its own ``batch_id=N``
+partition, and a retry excludes its own partition when reading the store.
+Their filesystem helpers live here too -- :func:`path_exists`,
+:func:`batch_ids` (the ``batch_id=N`` partitions present) and
+:func:`delete_path` -- as do the ``_CONFIG`` layout pin every family
+shares (:func:`ensure_store_config` / :func:`validate_store_config`).
 """
 
 from __future__ import annotations
@@ -71,8 +83,38 @@ def _fs(spark, path: str):
     )
 
 
+def path_exists(spark, path: str) -> bool:
+    jvm, _, fs = _fs(spark, path)
+    return fs.exists(jvm.org.apache.hadoop.fs.Path(path))
+
+
+def delete_path(spark, path: str) -> None:
+    """Recursively delete ``path``; a missing path is a no-op."""
+    jvm, _, fs = _fs(spark, path)
+    fs.delete(jvm.org.apache.hadoop.fs.Path(path), True)
+
+
+def batch_ids(spark, path: str) -> list[int]:
+    """Sorted ids of the ``batch_id=N`` partition directories directly
+    under a batch-keyed store path; empty when the path does not exist
+    (a store no batch has written yet)."""
+    jvm, _, fs = _fs(spark, path)
+    root = jvm.org.apache.hadoop.fs.Path(path)
+    if not fs.exists(root):
+        return []
+    ids = []
+    for status in fs.listStatus(root):
+        name = status.getPath().getName()
+        if status.isDirectory() and name.startswith("batch_id="):
+            try:
+                ids.append(int(name.split("=", 1)[1]))
+            except ValueError:
+                continue
+    return sorted(ids)
+
+
 def read_sidecar(spark, path: str) -> str | None:
-    """Read a small sidecar file (CONFIG/FAMILY marker) as text, or None."""
+    """Read a small sidecar file (MANIFEST, _CONFIG) as text, or None."""
     jvm, conf, fs = _fs(spark, path)
     p = jvm.org.apache.hadoop.fs.Path(path)
     if not fs.exists(p):
@@ -91,24 +133,30 @@ def read_sidecar(spark, path: str) -> str | None:
     return "\n".join(lines)
 
 
-def write_sidecar(spark, path: str, body: str) -> None:
-    """Write a small sidecar file via tmp + overwrite-rename (same atomic
-    flip as the manifest, so a reader never sees a partial file)."""
+def _write_renamed(spark, path: str, body: str, *, tmp: str, overwrite: bool) -> None:
+    """Stage ``body`` at ``tmp``, then rename it onto ``path`` through
+    FileContext (plain FileSystem.rename refuses an existing target).
+    ``overwrite=True`` is the atomic flip: posix and HDFS swap the file in
+    one step, so a reader sees either the old or the new bytes, never a
+    partial file and never a missing one.  ``overwrite=False`` raises
+    ``FileAlreadyExistsException`` when ``path`` exists."""
     jvm, conf, fs = _fs(spark, path)
-    tmp = jvm.org.apache.hadoop.fs.Path(f"{path}.tmp")
-    out = fs.create(tmp, True)
+    hfs = jvm.org.apache.hadoop.fs
+    out = fs.create(hfs.Path(tmp), True)
     try:
         out.write(bytearray(body.encode()))
     finally:
         out.close()
-    dst = jvm.org.apache.hadoop.fs.Path(path)
-    fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(
-        jvm.java.net.URI.create(path), conf
-    )
-    gw = spark.sparkContext._gateway
-    opts = gw.new_array(jvm.org.apache.hadoop.fs.Options.Rename, 1)
-    opts[0] = jvm.org.apache.hadoop.fs.Options.Rename.OVERWRITE
-    fc.rename(tmp, dst, opts)
+    fc = hfs.FileContext.getFileContext(jvm.java.net.URI.create(path), conf)
+    opts = spark.sparkContext._gateway.new_array(hfs.Options.Rename, 1)
+    opts[0] = hfs.Options.Rename.OVERWRITE if overwrite else hfs.Options.Rename.NONE
+    fc.rename(hfs.Path(tmp), hfs.Path(path), opts)
+
+
+def write_sidecar(spark, path: str, body: str) -> None:
+    """Write a small sidecar file via tmp + overwrite-rename (same atomic
+    flip as the manifest, so a reader never sees a partial file)."""
+    _write_renamed(spark, path, body, tmp=f"{path}.tmp", overwrite=True)
 
 
 def write_sidecar_exclusive(spark, path: str, body: str) -> bool:
@@ -126,31 +174,33 @@ def write_sidecar_exclusive(spark, path: str, body: str) -> bool:
     -- the exclusive-create step the advisor asked for."""
     import uuid
 
-    jvm, conf, fs = _fs(spark, path)
-    tmp = jvm.org.apache.hadoop.fs.Path(f"{path}.tmp.{uuid.uuid4().hex}")
-    out = fs.create(tmp, True)
-    try:
-        out.write(bytearray(body.encode()))
-    finally:
-        out.close()
-    dst = jvm.org.apache.hadoop.fs.Path(path)
-    fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(
-        jvm.java.net.URI.create(path), conf
-    )
-    gw = spark.sparkContext._gateway
-    opts = gw.new_array(jvm.org.apache.hadoop.fs.Options.Rename, 1)
-    opts[0] = jvm.org.apache.hadoop.fs.Options.Rename.NONE
     from py4j.protocol import Py4JJavaError
 
+    tmp = f"{path}.tmp.{uuid.uuid4().hex}"
     try:
-        fc.rename(tmp, dst, opts)
+        _write_renamed(spark, path, body, tmp=tmp, overwrite=False)
     except Py4JJavaError as e:
-        cls = e.java_exception.getClass().getName()
-        if "AlreadyExists" not in cls:
+        if "AlreadyExists" not in e.java_exception.getClass().getName():
             raise
-        fs.delete(tmp, False)
+        delete_path(spark, tmp)
         return False
     return True
+
+
+def _check_config(store_path: str, existing: dict, config: dict, what: str) -> dict:
+    """Raise when any of ``config``'s knobs differs from the pinned
+    ``existing`` config; returns ``existing`` otherwise."""
+    mismatched = {
+        k: (existing.get(k), v) for k, v in config.items() if existing.get(k) != v
+    }
+    if mismatched:
+        raise ValueError(
+            f"store at {store_path!r} {what}"
+            f" {{name: (stored, given)}} = {mismatched!r}."
+            " A mismatch would silently rehash keys into different"
+            " buckets / mix hash families across batch directories."
+        )
+    return existing
 
 
 def ensure_store_config(spark, store_path: str, config: dict) -> dict:
@@ -201,18 +251,11 @@ def ensure_store_config(spark, store_path: str, config: dict) -> dict:
                 " race but the winning sidecar is unreadable; aborting"
                 " rather than guessing the layout."
             )
-    mismatched = {
-        k: (existing.get(k), v) for k, v in config.items() if existing.get(k) != v
-    }
-    if mismatched:
-        raise ValueError(
-            f"store at {store_path!r} was created with a different layout"
-            f" config; refusing to fold with mismatched knobs"
-            f" {{name: (stored, given)}} = {mismatched!r}."
-            " A mismatch would silently rehash keys into different"
-            " buckets / mix hash families across batch directories."
-        )
-    return existing
+    return _check_config(
+        store_path, existing, config,
+        "was created with a different layout config; refusing to fold"
+        " with mismatched knobs",
+    )
 
 
 def read_store_config(spark, store_path: str) -> dict | None:
@@ -230,17 +273,10 @@ def validate_store_config(spark, store_path: str, config: dict) -> dict | None:
     existing = read_store_config(spark, store_path)
     if existing is None:
         return None
-    mismatched = {
-        k: (existing.get(k), v) for k, v in config.items() if existing.get(k) != v
-    }
-    if mismatched:
-        raise ValueError(
-            f"maintenance op on store {store_path!r} called with knobs that"
-            f" mismatch the pinned CONFIG {{name: (stored, given)}} ="
-            f" {mismatched!r}; proceeding would rehash keys into different"
-            " buckets and corrupt the store silently."
-        )
-    return existing
+    return _check_config(
+        store_path, existing, config,
+        "got maintenance-op knobs that mismatch the pinned CONFIG",
+    )
 
 
 @dataclass
@@ -277,24 +313,17 @@ class ManifestStore:
     # -- manifest ---------------------------------------------------------
 
     def read_manifest(self) -> Manifest | None:
-        jvm, conf, fs = _fs(self.spark, self.path)
-        mpath = jvm.org.apache.hadoop.fs.Path(f"{self.path}/MANIFEST")
-        if not fs.exists(mpath):
+        body = read_sidecar(self.spark, f"{self.path}/MANIFEST")
+        if body is None:
             return None
-        stream_ = fs.open(mpath)
-        try:
-            reader = jvm.java.io.BufferedReader(jvm.java.io.InputStreamReader(stream_))
-            cur, par = reader.readLine(), reader.readLine()
-            l3, l4 = reader.readLine(), reader.readLine()
-            extras = [reader.readLine() for _ in range(self.n_extras)]
-        finally:
-            stream_.close()
+        lines = body.split("\n") + [None] * (4 + self.n_extras)
+        cur, par, l3, l4 = lines[:4]
         return Manifest(
             cur,
             par,
             json.loads(l3) if l3 else None,
             json.loads(l4) if l4 else None,
-            [json.loads(e) if e else None for e in extras],
+            [json.loads(e) if e else None for e in lines[4 : 4 + self.n_extras]],
         )
 
     def write_manifest(
@@ -305,38 +334,21 @@ class ManifestStore:
         par_map: dict | None = None,
         extras: list | None = None,
     ) -> None:
-        """Write-to-tmp then rename WITH OVERWRITE (FileContext supports
-        it; plain FileSystem.rename refuses an existing target).  A
-        delete-then-rename flip would leave a window with no MANIFEST in
-        which readers raise; overwrite-rename is atomic on posix and
-        HDFS, so a reader always sees either the old or the new manifest
-        -- and for bucketed stores the bucket map rides the SAME file, so
-        the bucket->version mapping is exactly as atomic as the version
-        pointer.  ``par_map=None`` under a non-None ``cur_map``
+        """Atomic flip through :func:`write_sidecar` (tmp + overwrite-
+        rename; a delete-then-rename flip would leave a window with no
+        MANIFEST in which readers raise).  For bucketed stores the bucket
+        map rides the SAME file, so the bucket->version mapping is exactly
+        as atomic as the version pointer.  ``par_map=None`` under a non-None ``cur_map``
         serializes as JSON null: "the parent was a legacy whole-version
         store", so a retry of the upgrade batch re-runs the full legacy
         fold instead of reading an empty bucket map and dropping
         history."""
-        jvm, conf, fs = _fs(self.spark, self.path)
         body = f"{version}\n{parent}"
         if cur_map is not None or extras is not None:
             body += f"\n{json.dumps(cur_map)}\n{json.dumps(par_map)}"
         for e in extras or []:
             body += f"\n{json.dumps(e)}"
-        tmp = jvm.org.apache.hadoop.fs.Path(f"{self.path}/MANIFEST.tmp")
-        out = fs.create(tmp, True)
-        try:
-            out.write(bytearray(body.encode()))
-        finally:
-            out.close()
-        dst = jvm.org.apache.hadoop.fs.Path(f"{self.path}/MANIFEST")
-        fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(
-            jvm.java.net.URI.create(self.path), conf
-        )
-        gw = self.spark.sparkContext._gateway
-        opts = gw.new_array(jvm.org.apache.hadoop.fs.Options.Rename, 1)
-        opts[0] = jvm.org.apache.hadoop.fs.Options.Rename.OVERWRITE
-        fc.rename(tmp, dst, opts)
+        write_sidecar(self.spark, f"{self.path}/MANIFEST", body)
 
     # -- versions ---------------------------------------------------------
 
@@ -346,10 +358,9 @@ class ManifestStore:
         after flip) or a partial write from a crashed attempt (retry
         before flip).  Either way a fresh ``v{b}_r{k}`` keeps every flip
         pointing at a directory that was written exactly once, fully."""
-        jvm, conf, fs = _fs(self.spark, self.path)
         me = f"v{batch_id}"
         cand, attempt = me, 0
-        while fs.exists(jvm.org.apache.hadoop.fs.Path(f"{self.path}/{cand}")):
+        while path_exists(self.spark, f"{self.path}/{cand}"):
             attempt += 1
             cand = f"{me}_r{attempt}"
         return cand
@@ -380,8 +391,7 @@ class ManifestStore:
         count/sum agg) must NOT adopt this maintenance pattern: replaying
         a batch on top of state that already includes it double-counts."""
         cand, attempt = f"v{batch_id}m1", 1
-        jvm, conf, fs = _fs(self.spark, self.path)
-        while fs.exists(jvm.org.apache.hadoop.fs.Path(f"{self.path}/{cand}")):
+        while path_exists(self.spark, f"{self.path}/{cand}"):
             attempt += 1
             cand = f"v{batch_id}m{attempt}"
         return cand

@@ -22,45 +22,34 @@ metadata only, and the static side of stream-static joins broadcasts.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from odp_dynamic_data_pipeline_spark.streaming.kvstore import (
+    ManifestStore,
+    batch_ids,
+    delete_path,
+    ensure_store_config,
+    path_exists,
+    validate_store_config,
+)
 
-def _parallel_sink_writes(*thunks) -> None:
-    """Run a fold's INDEPENDENT sink writes as concurrent Spark jobs
-    (guide §2.6: actions are only sequential because the driver calls
-    them sequentially).  The heavy store folds are job-latency bound
-    (r13 receipts: 0.55 s warm for an empty 2-batch drain; multi-second
-    folds are 2-4 blocking submissions each), and most folds end with
-    2-3 writes to DISJOINT batch-keyed paths that share persisted
-    intermediates -- overlapping them saves one to two submissions of
-    latency per fold locally, and at cluster scale lets one write's
-    straggler tail back-fill the other's executors.
 
-    Safety: concurrent jobs that race to compute the same persisted
-    partition serialize per block in the BlockManager (one computes, the
-    others read).  Retry semantics are unchanged -- every sink is an
-    overwrite of a batch-keyed path (or a manifest commit whose replay
-    rule already covers a crash between sinks), so a partially-written
-    fold replays identically whatever order the writes landed in.  Any
-    write failure propagates after all submitted writes settle, so the
-    enclosing foreachBatch still fails loudly."""
-    if len(thunks) == 1:
-        thunks[0]()
-        return
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [pool.submit(t) for t in thunks]
-        errs = []
-        for f in futures:
-            try:
-                f.result()
-            except BaseException as e:  # noqa: BLE001 -- collect, raise below
-                errs.append(e)
-    if errs:
-        raise errs[0]
+def _drain(stream: DataFrame, checkpoint: str, process):
+    """Run ``process(batch_df, batch_id)`` over every micro-batch currently
+    available (Trigger.AvailableNow), then stop: the one foreachBatch
+    loop behind every incremental store runner."""
+    q = (
+        stream.writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return q
 
 
 def windowed_event_counts(
@@ -536,21 +525,11 @@ def run_incremental_dedup(
 
     from odp_dynamic_data_pipeline_spark.operators.text import fingerprint
 
-    def _path_exists(spark, path: str) -> bool:
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        fs = jvm.org.apache.hadoop.fs.FileSystem.get(jvm.java.net.URI.create(path), conf)
-        return fs.exists(jvm.org.apache.hadoop.fs.Path(path))
-
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         # pin the fingerprint source/layout (advisor r10 guard class): a
         # resume with a different text_col produces incomparable
         # fingerprints -- duplicates silently pass the anti-join
-        from odp_dynamic_data_pipeline_spark.streaming.kvstore import (
-            ensure_store_config,
-        )
-
         ensure_store_config(
             spark, store_path,
             {"family": "dedup", "text_col": text_col, "fp_col": fp_col,
@@ -573,17 +552,7 @@ def run_incremental_dedup(
         # sidecar creates the store directory before the first batch
         # writes any parquet, and reading a data-less directory fails
         # schema inference
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        fs = jvm.org.apache.hadoop.fs.FileSystem.get(
-            jvm.java.net.URI.create(store_path), conf
-        )
-        root = jvm.org.apache.hadoop.fs.Path(store_path)
-        has_data = fs.exists(root) and any(
-            s.getPath().getName().startswith("batch_id=")
-            for s in fs.listStatus(root)
-        )
-        if has_data:
+        if batch_ids(spark, store_path):
             # exclude this batch's own partition: a retry must not see the
             # failed attempt's fingerprints and drop the whole batch.
             # Broadcast direction matters at scale: broadcast the BATCH's
@@ -604,25 +573,14 @@ def run_incremental_dedup(
         else:  # first batch: no store yet
             fresh = fp
         fresh.persist()
-        _parallel_sink_writes(
-            lambda: fresh.write.mode("overwrite").parquet(
-                f"{out_path}/batch_id={batch_id}"
-            ),
-            lambda: fresh.select(fp_col).write.mode("overwrite").parquet(
-                f"{store_path}/batch_id={batch_id}"
-            ),
+        fresh.write.mode("overwrite").parquet(f"{out_path}/batch_id={batch_id}")
+        fresh.select(fp_col).write.mode("overwrite").parquet(
+            f"{store_path}/batch_id={batch_id}"
         )
         fresh.unpersist()
         fp.unpersist()
 
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _drain(stream, checkpoint, process)
 
 
 def apply_incremental_agg_batch(
@@ -640,8 +598,6 @@ def apply_incremental_agg_batch(
     directly testable without checkpoint surgery, and so a non-streaming
     caller can fold a backfill batch with the identical protocol."""
     from pyspark.sql import functions as SF
-
-    from odp_dynamic_data_pipeline_spark.streaming.kvstore import ManifestStore
 
     spark = batch_df.sparkSession
     store = ManifestStore(spark, store_path)
@@ -668,8 +624,6 @@ def apply_incremental_agg_batch(
         store.commit_flat(batch_id, part, base)
         return
     # bucketed delta-merge: fold ONLY the buckets this batch touches
-    from odp_dynamic_data_pipeline_spark.streaming.kvstore import ensure_store_config
-
     # pin the layout knobs at first bucketed fold; a later fold with a
     # different n_buckets/key set would silently rehash keys into other
     # buckets (rows invisible to touched-bucket folds) -- fail loudly
@@ -749,38 +703,18 @@ def run_incremental_agg(
     fully bucket-mapped store.  The poor-man's table format: what
     Delta/Iceberg do with file-level manifests, expressed in plain
     parquet + one swap file."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        apply_incremental_agg_batch(
-            batch_df,
-            batch_id,
-            store_path,
+    return _drain(
+        stream,
+        checkpoint,
+        partial(
+            apply_incremental_agg_batch,
+            store_path=store_path,
             key_cols=key_cols,
             count_col=count_col,
             sum_col=sum_col,
             n_buckets=n_buckets,
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        ),
     )
-    q.awaitTermination()
-    return q
-
-
-def _agg_manifest(spark, store_path: str) -> tuple[str, str, dict | None, dict | None]:
-    """Parse a run_incremental_agg MANIFEST: (current, parent, current
-    bucket map, parent bucket map); maps are None for legacy stores.
-    Back-compat wrapper over kvstore.ManifestStore."""
-    from odp_dynamic_data_pipeline_spark.streaming.kvstore import ManifestStore
-
-    m = ManifestStore(spark, store_path).read_manifest()
-    if m is None:
-        raise ValueError(f"no incremental-agg store at {store_path}")
-    return (m.current, m.parent, m.cur_map, m.par_map)
 
 
 def read_incremental_agg(spark, store_path: str) -> DataFrame:
@@ -790,7 +724,6 @@ def read_incremental_agg(spark, store_path: str) -> DataFrame:
     multi-path read -- a version directory may also hold STALE buckets
     superseded by later versions, so the map, not the directory, is the
     source of truth)."""
-    from odp_dynamic_data_pipeline_spark.streaming.kvstore import ManifestStore
 
     return ManifestStore(spark, store_path).read_current()
 
@@ -802,7 +735,6 @@ def vacuum_incremental_agg(spark, store_path: str) -> list[str]:
     Delegates to kvstore.ManifestStore.vacuum -- see its docstring for the
     retention set and the never-strand-a-reader argument.  Returns the
     deleted version names."""
-    from odp_dynamic_data_pipeline_spark.streaming.kvstore import ManifestStore
 
     return ManifestStore(spark, store_path).vacuum()
 
@@ -886,12 +818,6 @@ def run_incremental_neardup(
 
     rows_per_band = num_perm // bands
 
-    def _path_exists(spark, path: str) -> bool:
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        fs = jvm.org.apache.hadoop.fs.FileSystem.get(jvm.java.net.URI.create(path), conf)
-        return fs.exists(jvm.org.apache.hadoop.fs.Path(path))
-
     if hasher not in ("xx", "md5"):
         raise ValueError(f"run_incremental_neardup: hasher must be xx|md5, got {hasher!r}")
 
@@ -903,10 +829,6 @@ def run_incremental_neardup(
         # silently miss pairs or the multi-batch read fails opaquely.  The
         # n/num_perm/bands knobs are pinned too: a mismatch puts old and
         # new batches in incomparable signature spaces with no error.
-        from odp_dynamic_data_pipeline_spark.streaming.kvstore import (
-            ensure_store_config,
-        )
-
         ensure_store_config(
             spark, store_path,
             {
@@ -965,7 +887,7 @@ def run_incremental_neardup(
         # candidates vs the historical store (excluding this batch's own
         # partition -- a retry must not collide with its failed attempt)
         cands = []
-        if _path_exists(spark, f"{store_path}/buckets"):
+        if path_exists(spark, f"{store_path}/buckets"):
             old_b = (
                 spark.read.parquet(f"{store_path}/buckets")
                 .where(SF.col("batch_id") != SF.lit(batch_id))
@@ -994,7 +916,7 @@ def run_incremental_neardup(
         # broadcast-safe) BEFORE the union, so the shingle-hash table is
         # only ever scanned -- never shuffled whole -- and the join work
         # is candidate-driven, not store-size-driven
-        if _path_exists(spark, f"{store_path}/hashes"):
+        if path_exists(spark, f"{store_path}/hashes"):
             need = cand.select(SF.col("id_a").alias(id_col)).distinct()
             store_h = (
                 spark.read.parquet(f"{store_path}/hashes")
@@ -1020,29 +942,18 @@ def run_incremental_neardup(
             .where(SF.col("jaccard_e6") >= threshold_e6)
             .select("id_a", "id_b", "jaccard_e6")
         )
-        _parallel_sink_writes(
-            lambda: pairs.write.mode("overwrite").parquet(
-                f"{out_path}/batch_id={batch_id}"
-            ),
-            lambda: buckets.write.mode("overwrite").parquet(
-                f"{store_path}/buckets/batch_id={batch_id}"
-            ),
-            lambda: hashed.select(id_col, "hsh").write.mode("overwrite").parquet(
-                f"{store_path}/hashes/batch_id={batch_id}"
-            ),
+        pairs.write.mode("overwrite").parquet(f"{out_path}/batch_id={batch_id}")
+        buckets.write.mode("overwrite").parquet(
+            f"{store_path}/buckets/batch_id={batch_id}"
+        )
+        hashed.select(id_col, "hsh").write.mode("overwrite").parquet(
+            f"{store_path}/hashes/batch_id={batch_id}"
         )
         cand.unpersist()
         buckets.unpersist()
         hashed.unpersist()
 
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _drain(stream, checkpoint, process)
 
 
 def apply_incremental_semdedup_batch(
@@ -1071,7 +982,6 @@ def apply_incremental_semdedup_batch(
         ivf_assign,
         quantized,
     )
-    from odp_dynamic_data_pipeline_spark.streaming.kvstore import ensure_store_config
 
     spark = batch_df.sparkSession
     # pin the layout-determining knobs: a different centroid set, k,
@@ -1093,12 +1003,6 @@ def apply_incremental_semdedup_batch(
             "vec_col": vec_col,
         },
     )
-
-    def _path_exists(path: str) -> bool:
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        fs = jvm.org.apache.hadoop.fs.FileSystem.get(jvm.java.net.URI.create(path), conf)
-        return fs.exists(jvm.org.apache.hadoop.fs.Path(path))
 
     asg = (
         ivf_assign(
@@ -1129,7 +1033,7 @@ def apply_incremental_semdedup_batch(
     # row).  meta is a tiny batch-keyed table (one row per batch), so the
     # check reads a handful of rows, never the vector store.
     meta_path = f"{store_path}/meta"
-    if _path_exists(meta_path):
+    if path_exists(spark, meta_path):
         hwm = (
             spark.read.parquet(meta_path)
             .where(SF.col("batch_id") != SF.lit(batch_id))
@@ -1169,7 +1073,7 @@ def apply_incremental_semdedup_batch(
         .where(SF.col("id_a") < SF.col("id_b"))
     )
     vec_path = f"{store_path}/vectors"
-    if _path_exists(vec_path):
+    if path_exists(spark, vec_path):
         stored = (
             spark.read.parquet(vec_path)
             .where(SF.col("batch_id") != SF.lit(batch_id))
@@ -1207,22 +1111,13 @@ def apply_incremental_semdedup_batch(
     # the batch operator's semantics.  meta rides a JVM-built one-row
     # relation: a local-list createDataFrame executes as a pickled Python
     # RDD and costs a multi-second Python-worker round trip PER BATCH
-    # (measured ~5 s on local[32], r13).  All three sinks are independent
-    # batch-keyed overwrites sharing the persisted `asg` -- overlap them.
-    _parallel_sink_writes(
-        lambda: out.write.mode("overwrite").parquet(
-            f"{out_path}/batch_id={batch_id}"
-        ),
-        lambda: asg.write.mode("overwrite").parquet(
-            f"{vec_path}/batch_id={batch_id}"
-        ),
-        lambda: spark.range(1).select(
-            SF.lit(int(rng["lo"])).alias("min_id"),
-            SF.lit(int(rng["hi"])).alias("max_id"),
-        ).coalesce(1).write.mode("overwrite").parquet(
-            f"{meta_path}/batch_id={batch_id}"
-        ),
-    )
+    # (measured ~5 s on local[32], r13).
+    out.write.mode("overwrite").parquet(f"{out_path}/batch_id={batch_id}")
+    asg.write.mode("overwrite").parquet(f"{vec_path}/batch_id={batch_id}")
+    spark.range(1).select(
+        SF.lit(int(rng["lo"])).alias("min_id"),
+        SF.lit(int(rng["hi"])).alias("max_id"),
+    ).coalesce(1).write.mode("overwrite").parquet(f"{meta_path}/batch_id={batch_id}")
     asg.unpersist()
 
 
@@ -1267,28 +1162,20 @@ def run_incremental_semdedup(
     bounded by touched clusters; at k ~ sqrt(N) expected cluster size is
     sqrt(N), so cross-batch candidate pairs stay batch-driven -- never
     all-pairs, never a full-store shuffle."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        apply_incremental_semdedup_batch(
-            batch_df,
-            batch_id,
-            store_path,
-            out_path,
+    return _drain(
+        stream,
+        checkpoint,
+        partial(
+            apply_incremental_semdedup_batch,
+            store_path=store_path,
+            out_path=out_path,
             centroids=centroids,
             id_col=id_col,
             vec_col=vec_col,
             threshold=threshold,
             centroid_path=centroid_path,
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        ),
     )
-    q.awaitTermination()
-    return q
 
 
 def compact_incremental_store(spark, store_path: str) -> int:
@@ -1305,31 +1192,10 @@ def compact_incremental_store(spark, store_path: str) -> int:
     atomicity: every consumer tolerates duplicate rows (anti-join,
     dropDuplicates on candidates), so a crash between the baseline write
     and the partition deletes only costs duplicates until the next
-    compaction.  Returns the number of batch partitions folded."""
-    from pyspark.sql import functions as SF
-
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    fs = jvm.org.apache.hadoop.fs.FileSystem.get(jvm.java.net.URI.create(store_path), conf)
-    root = jvm.org.apache.hadoop.fs.Path(store_path)
-    parts = [
-        s.getPath().getName()
-        for s in fs.listStatus(root)
-        if s.isDirectory() and s.getPath().getName().startswith("batch_id=")
-    ]
-    to_fold = [p for p in parts if p != "batch_id=-1"]
-    if not to_fold:
-        return 0
-    df = spark.read.parquet(store_path).drop("batch_id")
+    compaction.  Returns the number of batch partitions folded (0 when
+    the store does not exist yet)."""
     # distinct: the baseline is the store's value set, not its write log
-    df.distinct().write.mode("overwrite").parquet(f"{store_path}/__baseline_tmp")
-    merged = spark.read.parquet(f"{store_path}/__baseline_tmp")
-    merged.write.mode("overwrite").parquet(f"{store_path}/batch_id=-1")
-    for p in parts:
-        if p != "batch_id=-1":
-            fs.delete(jvm.org.apache.hadoop.fs.Path(f"{store_path}/{p}"), True)
-    fs.delete(jvm.org.apache.hadoop.fs.Path(f"{store_path}/__baseline_tmp"), True)
-    return len(to_fold)
+    return _compact_batch_store(spark, store_path, DataFrame.distinct)
 
 
 def compact_incremental_count_store(
@@ -1350,32 +1216,32 @@ def compact_incremental_count_store(
     partition deletes leaves counts doubled (set-store consumers tolerate
     duplicate rows; count sums do not), which can only over-flag new
     arrivals until the next compaction completes -- it never un-flags.
-    Returns the number of batch partitions folded."""
-    from pyspark.sql import functions as SF
+    Returns the number of batch partitions folded (0 when the store does
+    not exist yet)."""
+    return _compact_batch_store(
+        spark,
+        store_path,
+        lambda df: df.groupBy(*key_cols).agg(
+            F.sum(count_col).cast("long").alias(count_col)
+        ),
+    )
 
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    fs = jvm.org.apache.hadoop.fs.FileSystem.get(jvm.java.net.URI.create(store_path), conf)
-    root = jvm.org.apache.hadoop.fs.Path(store_path)
-    parts = [
-        s.getPath().getName()
-        for s in fs.listStatus(root)
-        if s.isDirectory() and s.getPath().getName().startswith("batch_id=")
-    ]
-    to_fold = [p for p in parts if p != "batch_id=-1"]
+
+def _compact_batch_store(spark, store_path: str, fold) -> int:
+    """Shared body of the two compaction twins: ``fold`` maps the whole
+    store (batch_id dropped) to its baseline rows."""
+    to_fold = [b for b in batch_ids(spark, store_path) if b != -1]
     if not to_fold:
         return 0
-    df = spark.read.parquet(store_path).drop("batch_id")
-    folded = df.groupBy(*key_cols).agg(
-        SF.sum(count_col).cast("long").alias(count_col)
-    )
-    folded.write.mode("overwrite").parquet(f"{store_path}/__baseline_tmp")
-    merged = spark.read.parquet(f"{store_path}/__baseline_tmp")
-    merged.write.mode("overwrite").parquet(f"{store_path}/batch_id=-1")
-    for p in parts:
-        if p != "batch_id=-1":
-            fs.delete(jvm.org.apache.hadoop.fs.Path(f"{store_path}/{p}"), True)
-    fs.delete(jvm.org.apache.hadoop.fs.Path(f"{store_path}/__baseline_tmp"), True)
+    # staged through a tmp directory: the fold reads the old baseline, so
+    # it cannot overwrite batch_id=-1 in the same job
+    tmp = f"{store_path}/__baseline_tmp"
+    baseline = fold(spark.read.parquet(store_path).drop("batch_id"))
+    baseline.write.mode("overwrite").parquet(tmp)
+    spark.read.parquet(tmp).write.mode("overwrite").parquet(f"{store_path}/batch_id=-1")
+    for b in to_fold:
+        delete_path(spark, f"{store_path}/batch_id={b}")
+    delete_path(spark, tmp)
     return len(to_fold)
 
 
@@ -1433,21 +1299,11 @@ def run_incremental_hamming(
 
     from odp_dynamic_data_pipeline_spark.operators.dedup import hamming_bands
 
-    def _path_exists(spark, path: str) -> bool:
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        fs = jvm.org.apache.hadoop.fs.FileSystem.get(jvm.java.net.URI.create(path), conf)
-        return fs.exists(jvm.org.apache.hadoop.fs.Path(path))
-
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         # pin the band layout (the docstring's pre-r8 compatibility note,
         # made structural): bits/max_dist determine band widths, and a
         # mismatched resume silently misses cross-batch pairs
-        from odp_dynamic_data_pipeline_spark.streaming.kvstore import (
-            ensure_store_config,
-        )
-
         ensure_store_config(
             spark, store_path,
             {"family": "hamming", "code_col": code_col, "bits": bits,
@@ -1464,7 +1320,7 @@ def run_incremental_hamming(
             "bi", "bv", SF.col(id_col).alias("id_b"), SF.col(code_col).alias("__cb")
         )
         cands = []
-        if _path_exists(spark, f"{store_path}/bands"):
+        if path_exists(spark, f"{store_path}/bands"):
             old_b = (
                 spark.read.parquet(f"{store_path}/bands")
                 .where(SF.col("batch_id") != SF.lit(batch_id))
@@ -1500,7 +1356,7 @@ def run_incremental_hamming(
             )
             .dropDuplicates(["id_a", "id_b"])
         )
-        if _path_exists(spark, out_path):
+        if path_exists(spark, out_path):
             # re-delivered ids regenerate pairs already reported by earlier
             # batches; suppress them so the accumulated output stays the
             # unordered pair SET (own partition excluded -- a retried batch
@@ -1526,24 +1382,11 @@ def run_incremental_hamming(
                 )
             )
             pairs = pairs.join(touching, ["id_a", "id_b"], "left_anti")
-        _parallel_sink_writes(
-            lambda: pairs.write.mode("overwrite").parquet(
-                f"{out_path}/batch_id={batch_id}"
-            ),
-            lambda: bands.write.mode("overwrite").parquet(
-                f"{store_path}/bands/batch_id={batch_id}"
-            ),
-        )
+        pairs.write.mode("overwrite").parquet(f"{out_path}/batch_id={batch_id}")
+        bands.write.mode("overwrite").parquet(f"{store_path}/bands/batch_id={batch_id}")
         bands.unpersist()
 
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _drain(stream, checkpoint, process)
 
 
 def run_incremental_spans(
@@ -1611,16 +1454,10 @@ def run_incremental_spans(
     if min_count < 2:
         raise ValueError(f"min_count must be >= 2, got {min_count}")
 
-    def _path_exists(spark, path: str) -> bool:
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        fs = jvm.org.apache.hadoop.fs.FileSystem.get(jvm.java.net.URI.create(path), conf)
-        return fs.exists(jvm.org.apache.hadoop.fs.Path(path))
-
     def _migrate_legacy_wins(spark) -> None:
         # pre-r9 layout: {store_path}/wins/batch_id=N raw (id, pos, wh)
         # rows -- fold each batch partition into (wh, cnt) and drop it
-        if not _path_exists(spark, f"{store_path}/wins") or _path_exists(
+        if not path_exists(spark, f"{store_path}/wins") or path_exists(
             spark, f"{store_path}/whc"
         ):
             return
@@ -1632,12 +1469,7 @@ def run_incremental_spans(
             .mode("overwrite")
             .parquet(f"{store_path}/whc")
         )
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        fs = jvm.org.apache.hadoop.fs.FileSystem.get(
-            jvm.java.net.URI.create(store_path), conf
-        )
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{store_path}/wins"), True)
+        delete_path(spark, f"{store_path}/wins")
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -1650,10 +1482,6 @@ def run_incremental_spans(
         # bigints against today's keys -- the ingest gate would silently
         # under-count cross-batch occurrences.  With the key pinned, such a
         # resume fails the config gate loudly instead.
-        from odp_dynamic_data_pipeline_spark.streaming.kvstore import (
-            ensure_store_config,
-        )
-
         ensure_store_config(
             spark, store_path,
             {"family": "spans", "text_col": text_col,
@@ -1667,7 +1495,7 @@ def run_incremental_spans(
         batch_counts = win.groupBy("wh").agg(
             SF.count(SF.lit(1)).cast("long").alias("cnt")
         ).persist()
-        if _path_exists(spark, f"{store_path}/whc"):
+        if path_exists(spark, f"{store_path}/whc"):
             # prune BEFORE counting: only store hashes that collide with
             # this batch can affect the gate, and the batch's distinct-wh
             # set is broadcast-bounded -- per-batch shuffle cost is
@@ -1690,26 +1518,15 @@ def run_incremental_spans(
             .select(id_col, "pos")
         )
         spans = merge_window_spans(dup, min_tokens=min_tokens, id_col=id_col)
-        _parallel_sink_writes(
-            lambda: spans.write.mode("overwrite").parquet(
-                f"{out_path}/batch_id={batch_id}"
-            ),
-            lambda: batch_counts.write.mode("overwrite").parquet(
-                f"{store_path}/whc/batch_id={batch_id}"
-            ),
+        spans.write.mode("overwrite").parquet(f"{out_path}/batch_id={batch_id}")
+        batch_counts.write.mode("overwrite").parquet(
+            f"{store_path}/whc/batch_id={batch_id}"
         )
         batch_counts.unpersist()
         win.unpersist()
 
     _migrate_legacy_wins(stream.sparkSession)
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _drain(stream, checkpoint, process)
 
 
 def run_incremental_ivf(
@@ -1774,21 +1591,11 @@ def run_incremental_ivf(
     if not (1 <= nprobe <= nlist):
         raise ValueError(f"need 1 <= nprobe <= nlist, got {nprobe}/{nlist}")
 
-    def _path_exists(spark, path: str) -> bool:
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        fs = jvm.org.apache.hadoop.fs.FileSystem.get(jvm.java.net.URI.create(path), conf)
-        return fs.exists(jvm.org.apache.hadoop.fs.Path(path))
-
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         # pin the index layout: the centroid table is trained by the first
         # batch, so a mismatched nlist/vec_col on resume would assign new
         # vectors against a differently-shaped coarse quantizer
-        from odp_dynamic_data_pipeline_spark.streaming.kvstore import (
-            ensure_store_config,
-        )
-
         ensure_store_config(
             spark, store_path,
             {"family": "ivf", "vec_col": vec_col, "nlist": nlist},
@@ -1799,7 +1606,7 @@ def run_incremental_ivf(
             .persist()
         )
         cpath = f"{store_path}/centroids"
-        if _path_exists(spark, cpath):
+        if path_exists(spark, cpath):
             cents = [
                 r.qvec for r in spark.read.parquet(cpath).orderBy("j").collect()
             ]
@@ -1827,7 +1634,7 @@ def run_incremental_ivf(
             SF.explode("ivf_list").alias("ivf_list"),
         )
         sides = cand
-        if _path_exists(spark, f"{store_path}/vecs"):
+        if path_exists(spark, f"{store_path}/vecs"):
             old = (
                 spark.read.parquet(f"{store_path}/vecs")
                 .where(SF.col("batch_id") != SF.lit(batch_id))
@@ -1852,26 +1659,13 @@ def run_incremental_ivf(
             .where(SF.col("rank") <= k)
             .select("qid", "cand_id", "rank", "cosine")
         )
-        _parallel_sink_writes(
-            lambda: topk.write.mode("overwrite").parquet(
-                f"{out_path}/batch_id={batch_id}"
-            ),
-            lambda: cand.select(
-                SF.col("cand_id").alias(id_col), "ivf_list", "qvec", "qnorm"
-            ).write.mode("overwrite").parquet(
-                f"{store_path}/vecs/batch_id={batch_id}"
-            ),
-        )
+        topk.write.mode("overwrite").parquet(f"{out_path}/batch_id={batch_id}")
+        cand.select(
+            SF.col("cand_id").alias(id_col), "ivf_list", "qvec", "qnorm"
+        ).write.mode("overwrite").parquet(f"{store_path}/vecs/batch_id={batch_id}")
         q.unpersist()
 
-    q_ = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q_.awaitTermination()
-    return q_
+    return _drain(stream, checkpoint, process)
 
 
 def run_incremental_kmv(
@@ -1919,47 +1713,21 @@ def run_incremental_kmv(
 
     groups = group_cols or []
 
-    def _latest_prior_out(spark, current_id: int):
-        """Newest emitted partition with batch_id < current (None if no
-        prior emission): the accreted state, k rows per group."""
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        fs = jvm.org.apache.hadoop.fs.FileSystem.get(
-            jvm.java.net.URI.create(out_path), conf
-        )
-        root = jvm.org.apache.hadoop.fs.Path(out_path)
-        if not fs.exists(root):
-            return None
-        ids = []
-        for s in fs.listStatus(root):
-            name = s.getPath().getName()
-            if s.isDirectory() and name.startswith("batch_id="):
-                try:
-                    bid = int(name.split("=", 1)[1])
-                except ValueError:
-                    continue
-                if bid < current_id:
-                    ids.append(bid)
-        if not ids:
-            return None
-        return spark.read.parquet(f"{out_path}/batch_id={max(ids)}")
-
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         # pin the sketch shape: merging sketches built with a different k
         # or source column yields silently wrong distinct estimates
-        from odp_dynamic_data_pipeline_spark.streaming.kvstore import (
-            ensure_store_config,
-        )
-
         ensure_store_config(
             spark, store_path,
             {"family": "kmv", "col": col, "k": k, "group_cols": groups},
         )
         batch_sk = kmv_sketch(batch_df, col, k=k, group_cols=groups).persist()
         rows = batch_sk.select(*groups, SF.explode("sketch").alias("h"))
-        prev = _latest_prior_out(spark, batch_id)
-        if prev is not None:
+        # the newest emission before this batch is the accreted state, k
+        # rows per group
+        prior = [b for b in batch_ids(spark, out_path) if b < batch_id]
+        if prior:
+            prev = spark.read.parquet(f"{out_path}/batch_id={max(prior)}")
             merged = kmv_merge(
                 prev.select(*groups, "sketch").unionByName(
                     batch_sk.select(*groups, "sketch")
@@ -1969,53 +1737,11 @@ def run_incremental_kmv(
             )
         else:
             merged = batch_sk.select(*groups, "sketch", "n_sketch", "est_distinct")
-        # audit-trail mins + merged emission share the persisted batch
-        # sketch and write to disjoint batch-keyed paths -- overlap them
-        _parallel_sink_writes(
-            lambda: rows.write.mode("overwrite").parquet(
-                f"{store_path}/mins/batch_id={batch_id}"
-            ),
-            lambda: merged.write.mode("overwrite").parquet(
-                f"{out_path}/batch_id={batch_id}"
-            ),
-        )
+        rows.write.mode("overwrite").parquet(f"{store_path}/mins/batch_id={batch_id}")
+        merged.write.mode("overwrite").parquet(f"{out_path}/batch_id={batch_id}")
         batch_sk.unpersist()
 
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
-
-
-def _sessions_manifest(spark, store_path: str):
-    """Parse a run_incremental_sessions / run_incremental_upsert MANIFEST:
-    (current, parent, current bucket map, parent bucket map, current
-    max_ts_us, parent max_ts_us).  Returns None when the store has no
-    manifest yet.  Back-compat wrapper over kvstore.ManifestStore."""
-    from odp_dynamic_data_pipeline_spark.streaming.kvstore import ManifestStore
-
-    m = ManifestStore(spark, store_path, n_extras=2).read_manifest()
-    if m is None:
-        return None
-    return (m.current, m.parent, m.cur_map, m.par_map, m.extras[0], m.extras[1])
-
-
-def _sessions_write_manifest(
-    spark, store_path: str, version: str, parent: str,
-    cur_map: dict, par_map, cur_max, par_max,
-) -> None:
-    """Atomic overwrite-rename manifest flip (kvstore.ManifestStore
-    discipline), with two extra JSON lines carrying the store's event-time
-    high-water mark (current / parent) for the chronology guard."""
-    from odp_dynamic_data_pipeline_spark.streaming.kvstore import ManifestStore
-
-    ManifestStore(spark, store_path, n_extras=2).write_manifest(
-        version, parent, cur_map, par_map, [cur_max, par_max]
-    )
+    return _drain(stream, checkpoint, process)
 
 
 def apply_incremental_sessions_batch(
@@ -2084,11 +1810,6 @@ def apply_incremental_sessions_batch(
         part.unpersist()
         return  # empty batch: state and output unchanged
     batch_min, batch_max = int(lim["mn"]), int(lim["mx"])
-
-    from odp_dynamic_data_pipeline_spark.streaming.kvstore import (
-        ManifestStore,
-        ensure_store_config,
-    )
 
     store = ManifestStore(spark, store_path, n_extras=2)
     # pin layout + semantics knobs: an n_buckets/group_col mismatch
@@ -2248,21 +1969,17 @@ def apply_incremental_sessions_batch(
         new_state = new_open
     new_state = new_state.withColumn("bucket", bexpr)
 
-    # overlap the two sinks (both read the persisted `walked`); a crash
-    # between them replays fine either way -- the closed write is a
-    # batch-keyed overwrite and a post-flip retry recomputes identical
-    # rows from the recorded parent state (the store's retry rule)
-    _parallel_sink_writes(
-        lambda: closed.write.mode("overwrite").parquet(
-            f"{out_path}/batch={batch_id}"
-        ),
-        lambda: store.commit_buckets(
-            batch_id,
-            new_state,
-            touched,
-            base,
-            extras=[max(batch_max, base_max or batch_max), base_max],
-        ),
+    # closed sessions land BEFORE the manifest flip, so a visible flip
+    # implies its closed rows are emitted; a crash between the two replays
+    # both from the same base (batch-keyed overwrite, and a post-flip
+    # retry rebuilds from the recorded parent state)
+    closed.write.mode("overwrite").parquet(f"{out_path}/batch={batch_id}")
+    store.commit_buckets(
+        batch_id,
+        new_state,
+        touched,
+        base,
+        extras=[max(batch_max, base_max or batch_max), base_max],
     )
     walked.unpersist()
     part.unpersist()
@@ -2290,50 +2007,31 @@ def run_incremental_sessions(
     the store, so ANY chronological split of the input replays to exactly
     the one-shot batch result -- read_incremental_sessions() is
     hash-identical to sessionize_capped over the union of all drops."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        apply_incremental_sessions_batch(
-            batch_df,
-            batch_id,
-            store_path,
-            out_path,
+    return _drain(
+        stream,
+        checkpoint,
+        partial(
+            apply_incremental_sessions_batch,
+            store_path=store_path,
+            out_path=out_path,
             group_col=group_col,
             ts_col=ts_col,
             gap_s=gap_s,
             cap_s=cap_s,
             n_buckets=n_buckets,
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        ),
     )
-    q.awaitTermination()
-    return q
 
 
 def read_incremental_sessions(spark, store_path: str, out_path: str) -> DataFrame:
     """Current sessionization result: emitted CLOSED sessions (all
     batch= partitions of the output) plus the store's OPEN sessions --
     exactly the rows sessionize_capped produces over the same events."""
-    from pyspark.sql import functions as SF
-
-    m = _sessions_manifest(spark, store_path)
-    if m is None:
-        raise ValueError(f"no session store at {store_path}")
-    paths = [f"{store_path}/{v}/bucket={k}" for k, v in sorted(m[2].items())]
-    open_s = spark.read.parquet(*paths).select(
-        "*",
-    )
+    open_s = ManifestStore(spark, store_path, n_extras=2).read_current()
     open_s = open_s.select(
-        open_s.columns[0], "session_n", "n_events", "start_us", SF.col("last_us").alias("end_us")
+        open_s.columns[0], "session_n", "n_events", "start_us", F.col("last_us").alias("end_us")
     )
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    fs = jvm.org.apache.hadoop.fs.FileSystem.get(jvm.java.net.URI.create(out_path), conf)
-    if fs.exists(jvm.org.apache.hadoop.fs.Path(out_path)):
+    if path_exists(spark, out_path):
         closed = spark.read.parquet(f"{out_path}/batch=*")
         return closed.unionByName(open_s)
     return open_s
@@ -2387,11 +2085,6 @@ def apply_incremental_upsert_batch(
         batch_df.withColumn("__rn", SF.row_number().over(w))
         .where(SF.col("__rn") == 1)
         .drop("__rn")
-    )
-
-    from odp_dynamic_data_pipeline_spark.streaming.kvstore import (
-        ManifestStore,
-        ensure_store_config,
     )
 
     bexpr = SF.pmod(SF.xxhash64(*key_cols), SF.lit(n_buckets)).cast("int")
@@ -2453,22 +2146,18 @@ def run_incremental_upsert(
     With ``delete_col``, delete rows become retained tombstones (see
     apply_incremental_upsert_batch) -- filter them at read time and
     reclaim them with expire_upsert_tombstones."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        apply_incremental_upsert_batch(
-            batch_df, batch_id, store_path,
-            key_cols=key_cols, seq_cols=seq_cols, n_buckets=n_buckets,
+    return _drain(
+        stream,
+        checkpoint,
+        partial(
+            apply_incremental_upsert_batch,
+            store_path=store_path,
+            key_cols=key_cols,
+            seq_cols=seq_cols,
+            n_buckets=n_buckets,
             delete_col=delete_col,
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        ),
     )
-    q.awaitTermination()
-    return q
 
 
 def read_incremental_upsert(spark, store_path: str, *, delete_col: str | None = None) -> DataFrame:
@@ -2478,8 +2167,6 @@ def read_incremental_upsert(spark, store_path: str, *, delete_col: str | None = 
     the store so late lower-seq updates cannot resurrect the key, and
     only the read hides them."""
     from pyspark.sql import functions as SF
-
-    from odp_dynamic_data_pipeline_spark.streaming.kvstore import ManifestStore
 
     m = ManifestStore(spark, store_path, n_extras=2)
     if m.read_manifest() is None:
@@ -2512,11 +2199,6 @@ def expire_upsert_tombstones(
     streaming lifecycles like compact_incremental_store.  Returns the
     number of tombstones expired."""
     from pyspark.sql import functions as SF
-
-    from odp_dynamic_data_pipeline_spark.streaming.kvstore import (
-        ManifestStore,
-        validate_store_config,
-    )
 
     store = ManifestStore(spark, store_path, n_extras=2)
     m = store.read_manifest()
@@ -2630,10 +2312,6 @@ def apply_incremental_cc_batch(
     from pyspark.sql import functions as SF
 
     from odp_dynamic_data_pipeline_spark.operators.dedup import connected_components
-    from odp_dynamic_data_pipeline_spark.streaming.kvstore import (
-        ManifestStore,
-        ensure_store_config,
-    )
 
     spark = edges_df.sparkSession
     e = edges_df.select(SF.col(src_col).alias("src"), SF.col(dst_col).alias("dst"))
@@ -2857,20 +2535,17 @@ def run_incremental_cc(
     flight), fold the remap chain into the labels if it exceeds this many
     entries (None disables).  Keeps the manifest-resident chain bounded
     without any operator having to remember compact_incremental_cc."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        apply_incremental_cc_batch(
-            batch_df, batch_id, store_path,
-            src_col=src_col, dst_col=dst_col, n_buckets=n_buckets,
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    q = _drain(
+        stream,
+        checkpoint,
+        partial(
+            apply_incremental_cc_batch,
+            store_path=store_path,
+            src_col=src_col,
+            dst_col=dst_col,
+            n_buckets=n_buckets,
+        ),
     )
-    q.awaitTermination()
     if auto_compact_chain is not None:
         # Maintenance is best-effort: the drain above already committed, so
         # a compaction failure (e.g. a pinned-_CONFIG mismatch) must not
@@ -2901,8 +2576,6 @@ def read_incremental_cc(spark, store_path: str, universe: DataFrame | None = Non
     component -- the isolated-node semantics of operators.dedup.
     connected_components."""
     from pyspark.sql import functions as SF
-
-    from odp_dynamic_data_pipeline_spark.streaming.kvstore import ManifestStore
 
     store = ManifestStore(spark, f"{store_path}/labels", n_extras=2)
     m = store.read_manifest()
@@ -2940,11 +2613,6 @@ def compact_incremental_cc(spark, store_path: str, *, n_buckets: int = 64) -> in
     maintenance op here.  Returns the number of chain entries folded."""
     from pyspark.sql import functions as SF
     from pyspark.sql.types import StructField, StructType
-
-    from odp_dynamic_data_pipeline_spark.streaming.kvstore import (
-        ManifestStore,
-        validate_store_config,
-    )
 
     store = ManifestStore(spark, f"{store_path}/labels", n_extras=2)
     m = store.read_manifest()
@@ -3010,7 +2678,6 @@ def maybe_compact_incremental_cc(
     ~320 KB manifest line and a trivially broadcastable map, while a full
     label rewrite is store-size-driven; compacting far below that wastes
     rewrites, far above it bloats every manifest parse."""
-    from odp_dynamic_data_pipeline_spark.streaming.kvstore import ManifestStore
 
     m = ManifestStore(spark, f"{store_path}/labels", n_extras=2).read_manifest()
     if m is None:
@@ -3028,6 +2695,5 @@ def vacuum_incremental_kv(spark, store_path: str) -> list[str]:
     its docstring for the retention set (current + parent pointers +
     every version still owning a bucket in either map) and the
     never-strand-a-reader argument.  Returns the deleted version names."""
-    from odp_dynamic_data_pipeline_spark.streaming.kvstore import ManifestStore
 
     return ManifestStore(spark, store_path, n_extras=2).vacuum()

@@ -159,6 +159,8 @@ def test_compact_incremental_store_preserves_dedup(spark, tmp_path):
     _write("b1.json", [{"doc_id": 1, "text": "alpha beta"}], now - 90)
     _write("b2.json", [{"doc_id": 2, "text": "gamma delta"}], now - 60)
     store, out, ck = str(tmp_path / "cmp_store"), str(tmp_path / "cmp_out"), str(tmp_path / "cmp_ck")
+    # a store no batch has written yet folds nothing
+    assert compact_incremental_store(spark, store) == 0
 
     def _run():
         s = read_file_stream(spark, str(d), schema, multiline=False, max_files_per_trigger=1)

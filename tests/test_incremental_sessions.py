@@ -163,3 +163,20 @@ def test_vacuum_keeps_readable_store(spark, tmp_path):
 
     remaining = {d for d in os.listdir(store) if d.startswith("v")}
     assert not (remaining & set(deleted))
+
+
+def test_fold_jobs_keep_callers_job_group(spark, tmp_path):
+    # every sink job of a fold must run under the caller's job group, so a
+    # cancelJobGroup (query.stop()) reaches in-flight store writes
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("sessions-fold", "job-group propagation")
+    try:
+        _run_batches(spark, str(tmp_path), _split_by_hour(ROWS, 12.0))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    assert tracker.getJobIdsForGroup("sessions-fold")
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped

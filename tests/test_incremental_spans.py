@@ -170,6 +170,8 @@ def test_store_compaction_mid_stream_output_unchanged(spark, tmp_path):
         str(tmp_path / "sp_out"),
         str(tmp_path / "sp_ck"),
     )
+    # a store no batch has written yet folds nothing
+    assert compact_incremental_count_store(spark, f"{store}/whc", ["wh"]) == 0
     stream = read_file_stream(spark, src, SCHEMA, multiline=False)
     run_incremental_spans(stream, store, out, checkpoint=ck, min_tokens=8)
     assert compact_incremental_count_store(spark, f"{store}/whc", ["wh"]) == 1

@@ -217,11 +217,14 @@ def main(argv: list[str]) -> int:
         return 0
     siblings = sibling_colds(repo, cur_path, opts.get("--siblings"))
 
-    # host-window calibration: scale the prior bar UP (never down -- a
-    # fast window must not hide a real regression, capped 3x) by the
-    # larger of (a) the single-thread probe ratio and (b) the implied
-    # slowdown from integrated hypervisor steal, 1/(1-steal) relative to
-    # the source map's steal (maps predating the field count as clean).
+    # host-window calibration: scale the prior bar UP (never down, capped
+    # 3x) by the larger of (a) the single-thread probe ratio and (b) the
+    # implied slowdown from integrated hypervisor steal, 1/(1-steal)
+    # relative to the source map's steal (maps predating the field count
+    # as clean).  Never scaling down is a deliberate trade: in a window
+    # FASTER than the prior map's, a real regression can hide behind the
+    # host speedup (accepted false negatives), in return for fewer false
+    # positives from noisy slow windows.
     probes, steals = map_probes(repo)
     cur_probe = cur.get("st_probe_sec")
     cur_probe = float(cur_probe) if isinstance(cur_probe, (int, float)) else None

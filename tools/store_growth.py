@@ -566,9 +566,7 @@ class Upsert(Family):
         return tdir
 
     def write_filler(self, spark, store, m):
-        from odp_dynamic_data_pipeline_spark.streaming.stream import (
-            _sessions_write_manifest,
-        )
+        from odp_dynamic_data_pipeline_spark.streaming.kvstore import ManifestStore
 
         state = spark.range(BASE["agg"] * m).select(
             F.concat(F.lit("k"), F.col("id").cast("string")).alias("k"),
@@ -578,9 +576,8 @@ class Upsert(Family):
             "bucket", F.pmod(F.xxhash64("k"), F.lit(self.NB)).cast("int")
         )
         state.write.partitionBy("bucket").mode("overwrite").parquet(f"{store}/v-1")
-        _sessions_write_manifest(
-            spark, store, "v-1", "-",
-            {str(i): "v-1" for i in range(self.NB)}, None, None, None,
+        ManifestStore(spark, store, n_extras=2).write_manifest(
+            "v-1", "-", {str(i): "v-1" for i in range(self.NB)}, None, [None, None]
         )
 
     def batch_rows(self):
@@ -638,9 +635,7 @@ class Sessions(Family):
         return tdir
 
     def write_filler(self, spark, store, m):
-        from odp_dynamic_data_pipeline_spark.streaming.stream import (
-            _sessions_write_manifest,
-        )
+        from odp_dynamic_data_pipeline_spark.streaming.kvstore import ManifestStore
 
         state = spark.range(BASE["sessions"] * m).select(
             F.col("id").alias("user_id"),
@@ -651,10 +646,9 @@ class Sessions(Family):
             F.pmod(F.xxhash64("id"), F.lit(self.NB)).cast("int").alias("bucket"),
         )
         state.write.partitionBy("bucket").mode("overwrite").parquet(f"{store}/v-1")
-        _sessions_write_manifest(
-            spark, store, "v-1", "-",
-            {str(k): "v-1" for k in range(self.NB)}, None,
-            SESS_T0 + 3_600_000_000, None,
+        ManifestStore(spark, store, n_extras=2).write_manifest(
+            "v-1", "-", {str(k): "v-1" for k in range(self.NB)}, None,
+            [SESS_T0 + 3_600_000_000, None],
         )
 
     def batch_rows(self):
