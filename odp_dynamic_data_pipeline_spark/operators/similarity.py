@@ -121,69 +121,20 @@ def hard_negatives(
     )
 
 
-def _const_vec(ints) -> F.Column:
-    return F.array(*[F.lit(int(x)) for x in ints])
-
-
-def _dot_const(vec_col: str, ints) -> F.Column:
-    """<vec_col, constant vector> as exact bigint arithmetic."""
-    arr = ",".join(str(int(x)) for x in ints)
-    return F.expr(
-        f"aggregate(zip_with({vec_col}, array({arr}), (x, y) -> x * y),"
-        f" CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-    )
-
-
-# Above this many centroids, constant-folding the centroid set into the
-# expression tree stops being a plan-size win and becomes a plan-size
-# HAZARD: at k = floor(sqrt(N)) on a real corpus (N = 1e9 -> k ~ 31623,
-# dim 64 -> ~2M literals) the analyzer chokes long before an executor sees
-# a row.  Past the threshold the centroids travel as DATA -- one broadcast
-# single-row relation carrying array<struct<j, cvec, cnorm>> -- and the
-# argmin runs as a higher-order transform over that array: same exact
-# integer math, same lowest-index tie-break, O(1) plan size, zero shuffle
-# (BroadcastNestedLoopJoin against one row).  256 keeps every teaching-
-# scale plan on the (marginally faster to analyze) literal path.
+# Plan-literal budget for the families that still fold driver constants
+# into expressions (SRP-LSH hyperplane signs, PQ codebooks): 64 values per
+# entry x this many entries.  Past it a fold stops being a plan-size win
+# and becomes a plan-size HAZARD (at k = floor(sqrt(N)) on a real corpus,
+# ~2M literals choke the analyzer before an executor sees a row), so the
+# guards raise and point at the data path below.  Centroid sets never
+# fold: they always travel as a broadcast one-row relation.
 LITERAL_CENTROID_MAX = 256
-
-# The AUTO-path crossover is far below the hazard ceiling: once the
-# broadcast relation travels through Arrow (a JVM LocalRelation, not a
-# pickled Python RDD -- r13 localrel fix), the data path beats the
-# literal fold well before the plan becomes a hazard, because every
-# literal-path iteration re-analyzes and re-codegens a k x dim-term
-# expression while the data path's plan is O(1).  Measured at sf0.1
-# (dim 64, 3 Lloyd iterations, alternating reps in one session):
-# k=44 literal 5.3s vs data 2.8s; k=8 equal within noise (4.0 vs 3.8).
-# 16 keeps the small teaching plans (k/nlist = 8) on the literal path
-# and routes everything larger to the data path.  LITERAL_CENTROID_MAX
-# above remains the plan-size HAZARD budget for forced-literal callers
-# and the LSH/PQ fold guards.
-LITERAL_CENTROID_AUTO = 16
-
-# assign_two_level's centroid -> super grouping runs driver-side Python
-# only while k * g * dim stays under this many elementary int ops; past
-# it the grouping becomes one bounded Spark job (r13: at k=8000/dim=64
-# the Python loop was 46M interpreted ops and dominated the query)
-TWO_LEVEL_DRIVER_BUDGET = 5_000_000
-
-# assign_two_level's per-point stages run as Arrow/numpy integer matmuls
-# once k reaches this many centroids (r14, VERDICT r13 item 7 / guide
-# §4.2): the SQL path evaluates O(g + k/g) interpreted higher-order
-# zip_with/aggregate lambdas per point, and the r13 100x rehearsal
-# measured that term LEADING semantic_dedup_linear's scaling exponent
-# (0.789; assignment is O(N * sqrt(N/c) * dim) total).  The numpy path
-# does the identical exact int64 arithmetic (same first-min = lowest-
-# index tie-breaks) as two matmuls per batch, trading one JVM<->Python
-# Arrow crossing for a ~vectorized constant.  Small k stays on the SQL
-# path where plans are tiny and the Python boundary is the larger cost.
-TWO_LEVEL_ARROW_MIN = 16
 
 
 def _centroids_relation(spark, centroids: list[list[int]]):
     """One-row DataFrame carrying the centroid set as data: ``__cents``
     array<struct<j int, cvec array<bigint>, cnorm bigint>>, ordered by j
-    so in-order folds tie-break to the lowest index exactly like the
-    enumerate() order of the literal path."""
+    so in-order folds tie-break to the lowest index."""
     from pyspark.sql.types import (
         ArrayType,
         IntegerType,
@@ -196,8 +147,8 @@ def _centroids_relation(spark, centroids: list[list[int]]):
         (j, [int(x) for x in c], sum(int(x) * int(x) for x in c))
         for j, c in enumerate(centroids)
     ]
-    # non-nullable throughout so the data path's output schema matches the
-    # literal path's (F.lit structs) exactly, nullability included
+    # non-nullable throughout: every centroid entry is present, so the
+    # fields picked out of the ranked array keep non-nullable types
     cent_struct = StructType(
         [
             StructField("j", IntegerType(), False),
@@ -221,14 +172,21 @@ def _centroids_relation(spark, centroids: list[list[int]]):
         return spark.createDataFrame([(rows,)], schema)
 
 
+def _with_centroids(df: DataFrame, centroids: list[list[int]]) -> DataFrame:
+    """``df`` plus the ``__cents`` column: a cross join against the
+    broadcast one-row centroid relation (BroadcastNestedLoopJoin against
+    one row -- no shuffle, and an O(1) plan at any k)."""
+    return df.crossJoin(F.broadcast(_centroids_relation(df.sparkSession, centroids)))
+
+
 def _ranked_over_cents(vec_col: str, *, metric: str) -> F.Column:
     """array<struct<d, j>> of (distance, centroid index) over a joined
-    ``__cents`` column, ascending -- the data-path twin of the literal
-    array_sort(array(struct...)) in ivf_assign / centroid_assign_exact.
-    ``metric`` 'norm' computes |v|^2 - 2<v,c> + |c|^2 (needs a ``qnorm``
-    column), 'l2' computes sum((a-b)^2) directly; both are the same exact
-    BIGINT value, kept separate so each caller replays its oracle's
-    formula verbatim."""
+    ``__cents`` column, ascending, so element 0 is the nearest centroid
+    with ties to the lowest index; NULL for a null vector, which belongs
+    to no centroid.  ``metric`` 'norm' computes |v|^2 - 2<v,c> + |c|^2
+    (needs a ``qnorm`` column), 'l2' computes sum((a-b)^2) directly; both
+    are the same exact BIGINT value, kept separate so each caller replays
+    its oracle's formula verbatim."""
     if metric == "norm":
         d = (
             f"qnorm - 2 * aggregate(zip_with({vec_col}, c.cvec, (x, y) -> x * y),"
@@ -240,7 +198,8 @@ def _ranked_over_cents(vec_col: str, *, metric: str) -> F.Column:
             f" CAST(0 AS BIGINT), (acc, x) -> acc + x)"
         )
     return F.expr(
-        f"array_sort(transform(__cents, c -> named_struct('d', {d}, 'j', c.j)))"
+        f"IF({vec_col} IS NULL, NULL,"
+        f" array_sort(transform(__cents, c -> named_struct('d', {d}, 'j', c.j))))"
     )
 
 
@@ -250,55 +209,35 @@ def ivf_assign(
     vec_col: str = "qvec",
     out_col: str = "ivf_list",
     nprobe: int = 1,
-    centroid_path: str = "auto",
 ) -> DataFrame:
     """Assign each (quantized) vector to its nearest centroid(s) by exact
-    integer distance: dist2 = |v|^2 - 2<v,c> + |c|^2.  ``nprobe=1`` yields a
-    single list id; ``nprobe>1`` yields an array of the n nearest lists
-    (query-side multi-probe).
+    integer distance: dist2 = |v|^2 - 2<v,c> + |c|^2, ties to the lowest
+    index.  ``nprobe=1`` yields a single list id; ``nprobe>1`` yields an
+    array of the n nearest lists (query-side multi-probe).  A null vector
+    belongs to no list: -1 for ``nprobe=1``, an empty array otherwise.
 
-    Centroids fold into the plan as literals up to LITERAL_CENTROID_AUTO;
-    past that they ship as a broadcast one-row relation and the identical
-    arithmetic runs as a transform over the array -- the k = sqrt(N)
-    scale path (SemDeDup at web scale) where a plan-literal fold would
-    not survive analysis.  ``centroid_path``: 'auto' switches on the
-    threshold, 'literal' / 'data' force a path (the 'data' force is how
-    semantic_dedup_scaled_bcast keeps the scale path hash-gated at test
-    corpus sizes where auto would pick the literal path)."""
-    use_data = (
-        centroid_path == "data"
-        or (centroid_path == "auto" and len(centroids) > LITERAL_CENTROID_AUTO)
-    )
-    # The scalar (nprobe=1) assignment is wrapped in coalesce(expr, -1) to
-    # make the output column NON-NULLABLE (the getItem/getField chain is
-    # nullable even though it never actually yields null for a non-empty
-    # centroid set).  Without this, using the assignment as an inner-join
-    # key makes InferFiltersFromConstraints add IsNotNull(<assignment>),
-    # which predicate-pushdown inlines into the vector table's parquet
-    # scan -- the ENTIRE quantize + k-distance argmin pipeline evaluated
-    # a second time as a scan filter, below the parallelizing exchange
-    # (r13 plan audit caught it in ivf/ivfpq topk and two-level assign).
-    # coalesce never fires; values are bit-identical.
-    if use_data:
-        joined = df.crossJoin(
-            F.broadcast(_centroids_relation(df.sparkSession, centroids))
-        )
-        ranked = _ranked_over_cents(vec_col, metric="norm")
-        picked = (
-            F.coalesce(ranked[0]["j"], F.lit(-1))
-            if nprobe == 1
-            else F.slice(ranked, 1, nprobe)["j"]
-        )
-        return joined.withColumn(out_col, picked).drop("__cents")
-    entries = []
-    for j, c in enumerate(centroids):
-        c_norm = sum(int(x) * int(x) for x in c)
-        dist2 = F.col("qnorm") - F.lit(2) * _dot_const(vec_col, c) + F.lit(c_norm)
-        entries.append(F.struct(dist2.alias("d"), F.lit(j).alias("j")))
-    ranked = F.array_sort(F.array(*entries))
+    The centroids ship as a broadcast one-row relation and the argmin runs
+    as a transform over its array, so the plan stays O(1) at the
+    k = sqrt(N) scale (SemDeDup at web scale) where folding k x dim
+    literals into the expression would not survive analysis."""
+    if not centroids:
+        raise ValueError("centroids must be non-empty")
+    ranked = _ranked_over_cents(vec_col, metric="norm")
+    # The scalar assignment is NON-NULLABLE through coalesce.  Without it,
+    # using the assignment as an inner-join key makes
+    # InferFiltersFromConstraints add IsNotNull(<assignment>), which
+    # predicate-pushdown inlines into the vector table's parquet scan --
+    # the ENTIRE quantize + k-distance argmin pipeline evaluated a second
+    # time as a scan filter, below the parallelizing exchange (r13 plan
+    # audit caught it in ivf/ivfpq topk and two-level assign).  Both
+    # coalesces fire only for a null vector.
     if nprobe == 1:
-        return df.withColumn(out_col, F.coalesce(ranked[0]["j"], F.lit(-1)))
-    return df.withColumn(out_col, F.slice(ranked, 1, nprobe)["j"])
+        picked = F.coalesce(ranked[0]["j"], F.lit(-1))
+    else:
+        picked = F.coalesce(
+            F.slice(ranked, 1, nprobe)["j"], F.array().cast("array<int>")
+        )
+    return _with_centroids(df, centroids).withColumn(out_col, picked).drop("__cents")
 
 
 def ivf_topk(
@@ -316,11 +255,12 @@ def ivf_topk(
     vectors in its ``nprobe`` nearest lists.
 
     Centroids here are the first ``nlist`` candidate vectors (deterministic
-    seeding; swap in k-means output at will) -- they are driver-collected
-    constants (nlist x dim ints), folded into the assignment expression, so
-    assignment is a pure JVM map with NO join or shuffle.  At 100 TB this is
-    the standard two-stage ANN: sub-linear candidate generation via the
-    equi-join on list id, exact re-ranking only within probed lists."""
+    seeding; swap in k-means output at will) -- driver-collected nlist x dim
+    ints that reach the assignment as a broadcast one-row relation
+    (:func:`ivf_assign`), so assignment is a JVM map with NO shuffle.  At
+    100 TB this is the standard two-stage ANN: sub-linear candidate
+    generation via the equi-join on list id, exact re-ranking only within
+    probed lists."""
     cand = quantized(candidates.select(F.col(id_col).alias("cand_id"), vec_col), vec_col)
     qry = quantized(queries.select(F.col(id_col).alias("qid"), vec_col), vec_col)
 
@@ -356,14 +296,13 @@ def kmeans_quantizer(
     vec_col: str = "embedding",
     k: int = 8,
     iters: int = 3,
-    centroid_path: str = "auto",
     assign: bool = True,
 ) -> tuple[list[list[int]], DataFrame | None]:
     """Deterministic mini k-means over quantized vectors -- the trained
     coarse quantizer for ivf_topk (which defaults to seed-only centroids).
 
     Lloyd iterations as DataFrame ops: assignment is the shuffle-free
-    constant-centroid map (ivf_assign), the update is one groupBy on
+    broadcast-centroid map (ivf_assign), the update is one groupBy on
     (cluster, position) with exact integer means; only k x dim ints hit the
     driver per iteration (the same driver-side centroid loop as MLlib).
 
@@ -387,7 +326,7 @@ def kmeans_quantizer(
     dim = len(cents[0])
     assigned = None
     for _ in range(iters):
-        assigned = ivf_assign(cand, cents, nprobe=1, centroid_path=centroid_path)
+        assigned = ivf_assign(cand, cents, nprobe=1)
         stats = (
             assigned.select("ivf_list", F.posexplode("qvec").alias("pos", "v"))
             .groupBy("ivf_list", "pos")
@@ -425,7 +364,6 @@ def semantic_dedup(
     k: int = 8,
     iters: int = 3,
     threshold: float = 0.2,
-    centroid_path: str = "auto",
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication: cluster the embedding space
     with the trained coarse quantizer (:func:`kmeans_quantizer`), then mark
@@ -448,9 +386,7 @@ def semantic_dedup(
 
     Returns one row per input vector: (id_col, cluster_id, is_dup).
     """
-    _, assigned = kmeans_quantizer(
-        df, id_col=id_col, vec_col=vec_col, k=k, iters=iters, centroid_path=centroid_path
-    )
+    _, assigned = kmeans_quantizer(df, id_col=id_col, vec_col=vec_col, k=k, iters=iters)
     a = assigned.select(
         F.col(id_col).alias("id_a"),
         "ivf_list",
@@ -947,32 +883,20 @@ def centroid_assign_exact(
 ) -> DataFrame:
     """Assign each quantized vector to the nearest of ``centroids`` by
     exact integer squared L2, keeping the distance; ties break to the
-    lowest centroid index.  The centroids are driver-collected constants
-    (k x dim ints) folded into one JVM expression -- assignment is a pure
-    map inside whole-stage codegen, NO join, NO shuffle: the pattern that
-    lets a 100 TB topical-filter pass run at scan speed.  Past
-    LITERAL_CENTROID_AUTO the same math runs over a broadcast centroid
-    relation instead (see ivf_assign) so the plan stays O(1)."""
-    if len(centroids) > LITERAL_CENTROID_AUTO:
-        joined = df.crossJoin(
-            F.broadcast(_centroids_relation(df.sparkSession, centroids))
-        )
-        best = _ranked_over_cents(vec_col, metric="l2")[0]
-        return (
-            joined.withColumn(topic_col, best["j"])
-            .withColumn(dist_col, best["d"])
-            .drop("__cents")
-        )
-    entries = []
-    for j, c in enumerate(centroids):
-        arr = "array(" + ",".join(f"CAST({int(x)} AS BIGINT)" for x in c) + ")"
-        d2 = F.expr(
-            f"aggregate(zip_with({vec_col}, {arr}, (a, b) -> (a - b) * (a - b)),"
-            " CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-        )
-        entries.append(F.struct(d2.alias("d"), F.lit(j).alias("j")))
-    best = F.array_sort(F.array(*entries))[0]
-    return df.withColumn(topic_col, best["j"]).withColumn(dist_col, best["d"])
+    lowest centroid index.  A null vector gets a null topic and distance.
+    The driver-collected centroids (k x dim ints) reach the executors as
+    a broadcast one-row relation (see ivf_assign): assignment is a JVM map,
+    NO shuffle -- the pattern that lets a 100 TB topical-filter pass run
+    at scan speed -- with an O(1) plan at any k."""
+    if not centroids:
+        raise ValueError("centroids must be non-empty")
+    best = _ranked_over_cents(vec_col, metric="l2")[0]
+    return (
+        _with_centroids(df, centroids)
+        .withColumn(topic_col, best["j"])
+        .withColumn(dist_col, best["d"])
+        .drop("__cents")
+    )
 
 
 def assign_two_level(
@@ -984,7 +908,7 @@ def assign_two_level(
     dist_col: str = "d2",
 ) -> DataFrame:
     """Two-level centroid assignment -- the compute-scaling complement of
-    the broadcast data path: where the data path fixes PLAN size at
+    the broadcast centroid relation: where that fixes PLAN size at
     k ~ sqrt(N), this fixes assignment COMPUTE, from O(k) distances per
     point to O(2*sqrt(k)) (g = ceil(sqrt(k)) super-centroids, then exact
     argmin within the winning super's member group) -- ~70x fewer
@@ -996,168 +920,48 @@ def assign_two_level(
 
     * supers = the first g centroids BY INDEX (the seed idiom ivf_topk
       and ivfpq_topk already use);
-    * every centroid joins the group of its nearest super (exact integer
-      d2, ties to the lowest super index) -- k x g integer work, done
-      driver-side here (bounded: k*g*dim ~ 3.6e8 int ops at k=31623 is a
-      one-off; at larger k run this grouping itself as a Spark job);
+    * every centroid joins the group of its nearest super -- one k x g
+      int64 matmul on the driver (~45 MB at k = 31623);
     * per point: nearest super among g (stage A), then exact argmin over
-      that group's members (stage B), ties to the lowest index at both
-      stages.
+      that group's members (stage B).
 
-    Stage A folds g <= ~256 literals (or takes the data path past the
-    threshold); stage B is a broadcast equi-JOIN on the super id against
-    a g-row relation of member arrays -- one BroadcastHashJoin, no
-    shuffle of the vector table, argmin as a higher-order transform.
-
-    From k >= TWO_LEVEL_ARROW_MIN both per-point stages instead run as
-    exact int64 numpy matmuls inside one mapInArrow
-    (_assign_two_level_arrow; r14, guide §4.2) -- identical values and
-    tie-breaks, no join, no shuffle, and the per-point constant drops
-    from interpreted higher-order lambdas to vectorized C.  Callers
-    should pass only the columns they need (mapInArrow is opaque to
-    column pruning).
+    All three stages are one numpy argmin (exact int64 d2, ties to the
+    lowest index); the per-point stages run as one mapInArrow, no join,
+    no shuffle.  The member matrices travel inside the serialized
+    function (Spark broadcasts large Python commands automatically):
+    k*dim int64 at the k ~ sqrt(N)/(N/c) design points is MBs, not GBs.
+    A null vector gets a null topic and distance.  Callers should pass
+    only the columns they need (mapInArrow is opaque to column pruning).
     """
-    from pyspark.sql.types import (
-        ArrayType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    k = len(centroids)
-    g = math.ceil(math.sqrt(k))
-    supers = centroids[:g]
-    dim = len(centroids[0]) if centroids else 0
-
-    def d2_py(a, b) -> int:
-        return sum((int(x) - int(y)) * (int(x) - int(y)) for x, y in zip(a, b))
-
-    # group each centroid under its nearest super (tie -> lowest s).
-    # Driver-side Python is fine while k*g*dim stays small, but it is
-    # O(k^1.5 * dim) and the r13 100x rehearsal measured it DOMINATING the
-    # whole query at k=8000 (46M interpreted int ops) -- past the budget
-    # the same exact argmin runs as one bounded Spark job
-    # (centroid_assign_exact: identical integer L2, identical lowest-index
-    # tie-break) and only the k (j -> super) ints come back to the driver.
-    groups: dict[int, list] = {s: [] for s in range(g)}
-    if k * g * dim > TWO_LEVEL_DRIVER_BUDGET:
-        from odp_dynamic_data_pipeline_spark.functions.localrel import local_relation
-
-        cent_rows = [(j, [int(x) for x in c]) for j, c in enumerate(centroids)]
-        cent_df = local_relation(
-            df.sparkSession, cent_rows, "j int, qvec array<bigint>"
-        )
-        assigned_sup = centroid_assign_exact(
-            cent_df, supers, vec_col="qvec", topic_col="__s"
-        )
-        # bounded collect license: k (j, super) int pairs
-        j_to_s = {r["j"]: r["__s"] for r in assigned_sup.select("j", "__s").collect()}
-        for j, c in enumerate(centroids):
-            groups[j_to_s[j]].append(
-                (j, [int(x) for x in c], sum(int(x) * int(x) for x in c))
-            )
-    else:
-        for j, c in enumerate(centroids):
-            best_s = min(range(g), key=lambda s: (d2_py(c, supers[s]), s))
-            groups[best_s].append(
-                (j, [int(x) for x in c], sum(int(x) * int(x) for x in c))
-            )
-
-    if k >= TWO_LEVEL_ARROW_MIN:
-        return _assign_two_level_arrow(
-            df, supers, groups,
-            vec_col=vec_col, topic_col=topic_col, dist_col=dist_col,
-        )
-    member_struct = StructType(
-        [
-            StructField("j", IntegerType(), False),
-            StructField("cvec", ArrayType(LongType(), False), False),
-            StructField("cnorm", LongType(), False),
-        ]
-    )
-    rel_schema = StructType(
-        [
-            StructField("__sup", IntegerType(), False),
-            StructField("__members", ArrayType(member_struct, False), False),
-        ]
-    )
-    spark = df.sparkSession
-    member_rows = [(s, groups[s]) for s in range(g) if groups[s]]
-    # pandas/Arrow for the same reason as _centroids_relation: a plain
-    # local-list relation executes as a pickled Python RDD and costs a
-    # multi-second Python-worker round trip per job that scans it
-    try:
-        import pandas as pd
-
-        members_rel = spark.createDataFrame(
-            pd.DataFrame(
-                {"__sup": [r[0] for r in member_rows],
-                 "__members": [r[1] for r in member_rows]}
-            ),
-            rel_schema,
-        )
-    except Exception:
-        members_rel = spark.createDataFrame(member_rows, rel_schema)
-
-    staged = ivf_assign(df, supers, vec_col=vec_col, out_col="__sup", nprobe=1)
-    joined = staged.join(F.broadcast(members_rel), "__sup")
-    best = F.expr(
-        f"array_sort(transform(__members, c -> named_struct("
-        f"'d', aggregate(zip_with({vec_col}, c.cvec, (x, y) -> (x - y) * (x - y)),"
-        f" CAST(0 AS BIGINT), (acc, x) -> acc + x),"
-        f" 'j', c.j)))[0]"
-    )
-    return (
-        joined.withColumn(topic_col, best["j"])
-        .withColumn(dist_col, best["d"])
-        .drop("__sup", "__members")
-    )
-
-
-def _assign_two_level_arrow(
-    df: DataFrame,
-    supers: list[list[int]],
-    groups: dict[int, list],
-    *,
-    vec_col: str,
-    topic_col: str,
-    dist_col: str,
-) -> DataFrame:
-    """Arrow/numpy twin of assign_two_level's per-point stages (r14,
-    guide §4.2): one mapInArrow whose batches run stage A (nearest super)
-    and stage B (exact argmin within the winning super's member group) as
-    int64 matrix products -- value-identical to the SQL expression path:
-
-    * exact integer squared L2 throughout (numpy int64 matmul is exact;
-      products stay far inside int64 for quantized vectors);
-    * stage A drops the row-constant ||v||^2 term, which cannot change
-      the argmin or its ties; np.argmin returns the FIRST minimum =
-      lowest super index, the SQL path's tie-break;
-    * member matrices are ordered by centroid index j ascending (the
-      groups lists are built in enumerate order), so stage B's first
-      minimum is the lowest j, again matching array_sort((d, j)).
-
-    The member matrices travel inside the serialized function (Spark
-    broadcasts large Python commands automatically); k*dim int64 at the
-    k ~ sqrt(N)/(N/c) design points is MBs, not GBs.  Input vectors must
-    be non-null, fixed-dim (the quantized() contract for non-null
-    embeddings); a null/ragged batch fails loudly in the reshape rather
-    than silently mis-assigning."""
     import numpy as np
     from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
-    S = np.asarray(supers, dtype=np.int64)
-    Sn = (S * S).sum(axis=1)
-    dim = S.shape[1]
-    members: dict[int, tuple] = {}
-    for s, mem in groups.items():
-        if mem:
-            members[int(s)] = (
-                np.asarray([m[1] for m in mem], dtype=np.int64),
-                np.asarray([m[2] for m in mem], dtype=np.int64),
-                np.asarray([m[0] for m in mem], dtype=np.int32),
-            )
+    if not centroids:
+        raise ValueError("centroids must be non-empty")
+
+    def argmin_d2(V, C, Cn):
+        """(index, d2) of each row of V's nearest row of C (Cn = C's squared
+        norms).  numpy integer matmul is exact (products stay far inside
+        int64 for quantized vectors); np.argmin returns the FIRST minimum,
+        so ties go to the lowest index."""
+        d2 = (V * V).sum(axis=1)[:, None] + (V @ (C.T * -2) + Cn[None, :])
+        idx = np.argmin(d2, axis=1)
+        return idx, d2[np.arange(len(V)), idx]
+
+    C = np.asarray(centroids, dtype=np.int64)
+    Cn = (C * C).sum(axis=1)
+    g = math.ceil(math.sqrt(len(C)))
+    S, Sn = C[:g], Cn[:g]
+    dim = C.shape[1]
+    owner, _ = argmin_d2(C, S, Sn)
+    # member indices come out ascending, so stage B's first minimum is the
+    # lowest centroid index; a super with no members is never picked by
+    # stage A (only an identical lower-index super takes its own members,
+    # and that super wins every tie)
+    groups = {}
+    for s in np.unique(owner):
+        J = np.flatnonzero(owner == s)
+        groups[int(s)] = (J.astype(np.int32), C[J], Cn[J])
     vec_idx = df.columns.index(vec_col)
     out_schema = StructType(
         list(df.schema.fields)
@@ -1171,31 +975,22 @@ def _assign_two_level_arrow(
         import pyarrow as pa
 
         for batch in batches:
-            n = batch.num_rows
             col = batch.column(vec_idx)
-            if col.null_count:
-                raise ValueError(
-                    "assign_two_level: null vectors are not assignable"
-                    f" ({col.null_count} null {vec_idx}-col rows in batch)"
-                )
-            V = np.asarray(col.flatten(), dtype=np.int64).reshape(n, dim)
-            Vn = (V * V).sum(axis=1)
-            sup = np.argmin(V @ (S.T * -2) + Sn[None, :], axis=1)
-            topic = np.empty(n, dtype=np.int32)
-            d2 = np.empty(n, dtype=np.int64)
+            valid = col.is_valid().to_numpy(zero_copy_only=False)
+            # flatten() skips null vectors: row i of V is batch row at[i]
+            at = np.flatnonzero(valid)
+            V = np.asarray(col.flatten(), dtype=np.int64).reshape(-1, dim)
+            sup, _ = argmin_d2(V, S, Sn)
+            topic = np.zeros(batch.num_rows, dtype=np.int32)
+            d2 = np.zeros(batch.num_rows, dtype=np.int64)
             for s in np.unique(sup):
                 rows = np.flatnonzero(sup == s)
-                if int(s) not in members:
-                    # unreachable: an empty super implies an identical
-                    # lower-index super that wins every tie
-                    raise RuntimeError(f"empty super group {int(s)} selected")
-                M, Mn, J = members[int(s)]
-                dists = Vn[rows, None] + (V[rows] @ (M.T * -2) + Mn[None, :])
-                am = np.argmin(dists, axis=1)
-                topic[rows] = J[am]
-                d2[rows] = dists[np.arange(len(rows)), am]
+                J, M, Mn = groups[int(s)]
+                am, d2[at[rows]] = argmin_d2(V[rows], M, Mn)
+                topic[at[rows]] = J[am]
             yield pa.RecordBatch.from_arrays(
-                list(batch.columns) + [pa.array(topic), pa.array(d2)],
+                list(batch.columns)
+                + [pa.array(topic, mask=~valid), pa.array(d2, mask=~valid)],
                 names=list(batch.schema.names) + [topic_col, dist_col],
             )
 
@@ -1226,7 +1021,8 @@ def ivfpq_topk(
     This is the billion-scale shape: unlike :func:`pq_topk` (whose ADC pair
     stream is all N x Q code rows), the pair stream here is
     ~(nprobe/nlist) x N x Q and every stage before the final re-rank is a
-    map or an equi-join -- no cross join anywhere.  Residual encoding keeps
+    map or an equi-join -- no cross join of the data (the centroids join as
+    a broadcast one-row relation).  Residual encoding keeps
     PQ's quantization error centered per list (the reason IVFPQ beats
     IVF+flat-PQ at equal code budget).
 
@@ -1260,26 +1056,15 @@ def ivfpq_topk(
     ]
 
     def residual(df: DataFrame) -> DataFrame:
-        """vector minus its owning list's centroid, as ``__res``.  Folded
-        centroid literal up to LITERAL_CENTROID_AUTO lists; broadcast
-        centroid relation past it (same data-path switch as ivf_assign:
-        at nlist ~ sqrt(N) the literal would not survive analysis)."""
-        if nlist > LITERAL_CENTROID_AUTO:
-            return (
-                df.crossJoin(F.broadcast(_centroids_relation(df.sparkSession, cents)))
-                .withColumn(
-                    "__res",
-                    F.expr(
-                        "zip_with(qvec, element_at(__cents, ivf_list + 1).cvec,"
-                        " (x, y) -> x - y)"
-                    ),
-                )
-                .drop("__cents")
+        """vector minus its owning list's centroid, as ``__res``, read from
+        the broadcast centroid relation (null for an unassigned vector)."""
+        return (
+            _with_centroids(df, cents)
+            .withColumn(
+                "__res",
+                F.expr("zip_with(qvec, get(__cents, ivf_list).cvec, (x, y) -> x - y)"),
             )
-        cent_lit = _book_literal(cents)
-        return df.withColumn(
-            "__res",
-            F.expr(f"zip_with(qvec, element_at({cent_lit}, ivf_list + 1), (x, y) -> x - y)"),
+            .drop("__cents")
         )
 
     # candidates: one list each; residual vs the owning centroid; PQ codes
@@ -1364,7 +1149,7 @@ def kcenter_coreset(
 
     Each round is ONE distributed pass: the running min-distance column is
     updated with `least(mind2, d2-to-new-center)` where the new center is a
-    folded JVM constant (the ivf_assign pattern), and the argmax row comes
+    folded JVM constant (one dim-int literal per round), and the argmax row comes
     back through a TakeOrdered(1) -- k bounded single-row collects total,
     never a data-sized collect.  localCheckpoint per round truncates the
     lineage so round t does not recompute rounds 1..t-1 (and each pass

@@ -286,23 +286,15 @@ def semantic_dedup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     _semdedup_oracle(k=_K_SQRT_SQL, iters=3, threshold=0.2),
 )
 def semantic_dedup_scaled_bcast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """semantic_dedup_scaled with the BROADCAST-CENTROID assignment path
-    FORCED (operators.similarity.ivf_assign centroid_path='data'): the
-    k ~ sqrt(N) plan a real corpus takes, where folding k x dim centroid
-    ints into the expression tree would not survive analysis (r11's one
-    `weak` mark).  Centroids travel as a one-row broadcast relation and
-    the argmin is a higher-order transform -- identical exact integer
-    math, identical lowest-index tie-break, O(1) plan size.  At test
-    corpus sizes auto-switching would pick the literal path (k < 256),
-    so this twin pins the scale path under the driver's hash gate with
-    the SAME DuckDB oracle (the oracle replays arithmetic, not plan
-    shape); tests/test_fold_guard.py additionally proves path equality
-    and bounded k=1000 analysis."""
-    import math
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    k = int(math.floor(math.sqrt(emb.count())))
-    return sim.semantic_dedup(emb, k=k, iters=3, threshold=0.2, centroid_path="data")
+    """semantic_dedup_scaled under a second name: the same plan under the
+    same DuckDB oracle.  It once forced the broadcast-centroid assignment
+    path; every centroid assignment now ships the centroids as a one-row
+    broadcast relation (argmin as a higher-order transform, O(1) plan size
+    at k ~ sqrt(N)), so there is no other path left to pin.  The name
+    stays registered for its bench and rehearsal history.
+    tests/test_fold_guard.py checks the assignment against a pure-Python
+    reference and bounds k=1000 analysis."""
+    return semantic_dedup_scaled(spark, sf_dir)
 
 
 
@@ -347,13 +339,8 @@ def incremental_semdedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scale-path cluster count (see semantic_dedup_scaled): k ~ sqrt(N)
     # keeps within-cluster candidate pairs bounded as the corpus grows
     k = int(_math.floor(_math.sqrt(emb.count())))
-    # broadcast-centroid assignment everywhere: at k ~ sqrt(N) the literal
-    # path folds k x dim ints into every assignment plan; the data path is
-    # the shape that survives real corpus sizes and is fold-guard gated.
     # iters=0 = seeds only (assign_1 in the oracle assigns vs cents_0)
-    cents, _ = sim.kmeans_quantizer(
-        emb, k=k, iters=0, assign=False, centroid_path="data"
-    )
+    cents, _ = sim.kmeans_quantizer(emb, k=k, iters=0, assign=False)
     tmp = _stream_tmpdir("inc_semdedup_stream")
     src = f"{tmp}/in"
     rng = emb.agg(F.min("vec_id").alias("lo"), F.max("vec_id").alias("hi")).first()
@@ -383,7 +370,6 @@ def incremental_semdedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             checkpoint=f"{tmp}/ckpt",
             centroids=cents,
             threshold=0.2,
-            centroid_path="data",
         )
     return spark.read.parquet(f"{tmp}/out").select("vec_id", "cluster_id", "is_dup")
 
@@ -849,9 +835,10 @@ def topic_doc_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     topic-balanced 100 TB mixture needs (documents <-> embeddings by id).
 
     Centroid training is one (label, pos) aggregation collected to k x dim
-    driver constants (truncating integer means, engine-portable);
-    assignment is then a zero-shuffle JVM map over the embedding scan, and
-    the only corpus-scale shuffle is the id equi-join to documents."""
+    driver ints (truncating integer means, engine-portable); assignment is
+    then a zero-shuffle JVM map over the embedding scan against the
+    centroids as a broadcast one-row relation, and the only corpus-scale
+    shuffle is the id equi-join to documents."""
     emb = sim.quantized(
         load_table(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
     )
@@ -939,20 +926,18 @@ def topic_assign_two_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators.similarity.assign_two_level).  Deterministic at every
     stage (first-g supers by index, exact integer d2, ties to the lowest
     index twice), so the DuckDB oracle replays the approximate
-    assignment value-for-value -- stage A is a bounded literal fold or
-    the broadcast data path, stage B a single BroadcastHashJoin on the
-    super id, no shuffle of the embedding scan."""
+    assignment value-for-value -- both stages run as numpy int64 argmins
+    in one mapInArrow over the embedding scan, no join, no shuffle."""
     import math
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     q = sim.quantized(emb, "embedding")
     k = int(math.floor(math.sqrt(emb.count())))
     cents = [r["qvec"] for r in q.orderBy("vec_id").limit(k).select("qvec").collect()]
-    # pass only (id, qvec, qnorm): the Arrow assignment stage is opaque to
-    # column pruning, so an unpruned frame would ship the raw embedding
-    # doubles through the Python boundary for nothing (guide §4.1; qnorm
-    # stays because the small-k SQL path's ivf_assign formula needs it)
-    return sim.assign_two_level(q.select("vec_id", "qvec", "qnorm"), cents).select(
+    # pass only (id, qvec): the Arrow assignment stage is opaque to column
+    # pruning, so an unpruned frame would ship the raw embedding doubles
+    # through the Python boundary for nothing (guide §4.1)
+    return sim.assign_two_level(q.select("vec_id", "qvec"), cents).select(
         "vec_id", F.col("topic").cast("int").alias("topic"), "d2"
     )
 
@@ -1012,10 +997,9 @@ def semantic_dedup_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantic_dedup_linear__100x_r13 in SCALE_REHEARSAL.json).  This is
     how SemDeDup runs on web-scale corpora (cluster counts chosen for
     bounded cluster SIZE, not sqrt tradeoffs).  Bounded driver steps:
-    the k x dim seed collect and assign_two_level's k x g grouping are
-    both k-bounded (k = N/c keeps them 1/c of the corpus; at true 100 TB
-    the grouping itself becomes one extra Spark job, per the operator
-    docstring).  Fully deterministic; the DuckDB oracle replays the
+    the k x dim seed collect and assign_two_level's k x g grouping (one
+    driver numpy matmul) are both k-bounded (k = N/c keeps them 1/c of
+    the corpus).  Fully deterministic; the DuckDB oracle replays the
     two-level assignment AND the election value-for-value."""
     import math
 

@@ -966,7 +966,6 @@ def apply_incremental_semdedup_batch(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.2,
-    centroid_path: str = "auto",
 ) -> None:
     """One micro-batch fold of :func:`run_incremental_semdedup` -- module
     level so retry idempotency and the id-monotonicity guard are directly
@@ -1009,7 +1008,6 @@ def apply_incremental_semdedup_batch(
             quantized(batch_df.select(id_col, vec_col), vec_col),
             centroids,
             nprobe=1,
-            centroid_path=centroid_path,
         )
         .select(id_col, SF.col("ivf_list").cast("int").alias("__list"), "qvec", "qnorm")
         .persist()
@@ -1131,7 +1129,6 @@ def run_incremental_semdedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.2,
-    centroid_path: str = "auto",
 ):
     """Streaming SemDeDup: maintain the semantic-duplicate election of
     operators.similarity.semantic_dedup across micro-batches against a
@@ -1139,7 +1136,7 @@ def run_incremental_semdedup(
     k-means is trained offline on a sample, ingest assigns against the
     frozen codebook, like run_incremental_neardup freezes its hash
     family).  Per batch: quantize + nearest-centroid assignment (map-side,
-    no shuffle; broadcast data path past LITERAL_CENTROID_MAX), candidate
+    no shuffle; centroids as a broadcast one-row relation), candidate
     pairs from the cluster blocking key against BOTH the historical
     vector store (pruned to the batch's touched clusters) and the batch
     itself, exact integer cosine against ``threshold``, keep-first by
@@ -1173,7 +1170,6 @@ def run_incremental_semdedup(
             id_col=id_col,
             vec_col=vec_col,
             threshold=threshold,
-            centroid_path=centroid_path,
         ),
     )
 

@@ -137,8 +137,9 @@ def test_model_quality_score_is_map_only(spark):
 
 
 def test_topic_assignment_no_shuffle_before_join(spark):
-    """Centroid assignment is a folded-constant map; the only exchanges
-    allowed belong to the doc join (none when AQE broadcasts it)."""
+    """Centroid assignment is a map against the broadcast one-row centroid
+    relation; the only exchanges allowed belong to the doc join (none when
+    AQE broadcasts it)."""
     plan = plan_of(spark, "topic_doc_assignment")
     import re as _re
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan

@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from odp_dynamic_data_pipeline_spark.operators import similarity as sim
@@ -85,6 +86,44 @@ def test_centroid_assign_exact_argmin_and_ties(spark):
     assert out[1] == (0, 1_000_000**2)
     assert out[2] == (1, 2_000_000**2)
     assert out[3] == (0, 1_000_000**2)
+
+
+@pytest.mark.parametrize("k", [2, 20])
+def test_null_vector_belongs_to_no_centroid(spark, k):
+    """A null vector belongs to no centroid: ivf_assign gives the -1
+    sentinel (nprobe=1, column still non-nullable) or an empty probe list,
+    centroid_assign_exact and assign_two_level a null topic and distance.
+    The other rows in the same batches keep their exact assignment; k=20
+    runs two-level with 5 supers."""
+    rows = [(1, [1.0, 0.0]), (2, [4.0, 0.0]), (3, None), (4, [-1.0, 0.0])]
+    df = sim.quantized(
+        spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    ).select("vec_id", "qvec", "qnorm")
+    # c0, c1 near the data; the rest far away, so two-level == exact here
+    cents = [[0, 0], [2_000_000, 0]] + [
+        [100_000_000 + j, 100_000_000] for j in range(k - 2)
+    ]
+
+    one = sim.ivf_assign(df, cents, nprobe=1)
+    assert not one.schema["ivf_list"].nullable
+    assert {r["vec_id"]: r["ivf_list"] for r in one.collect()} == {1: 0, 2: 1, 3: -1, 4: 0}
+    multi = sim.ivf_assign(df, cents, nprobe=2)
+    assert {r["vec_id"]: list(r["ivf_list"]) for r in multi.collect()} == {
+        1: [0, 1], 2: [1, 0], 3: [], 4: [0, 1]
+    }
+    want = {1: (0, 1_000_000**2), 2: (1, 2_000_000**2), 3: (None, None), 4: (0, 1_000_000**2)}
+    for op in (sim.centroid_assign_exact, sim.assign_two_level):
+        out = op(df, cents).select("vec_id", "topic", "d2").collect()
+        assert {r["vec_id"]: (r["topic"], r["d2"]) for r in out} == want, op.__name__
+
+
+@pytest.mark.parametrize("op", ["ivf_assign", "centroid_assign_exact", "assign_two_level"])
+def test_empty_centroids_raise_value_error(spark, op):
+    df = sim.quantized(
+        spark.createDataFrame([(1, [1.0, 0.0])], "vec_id long, embedding array<float>")
+    )
+    with pytest.raises(ValueError, match="centroids must be non-empty"):
+        getattr(sim, op)(df, [])
 
 def test_random_projection_exact_and_jl(spark):
     """random_projection equals a pure-Python replay of the md5-parity

@@ -44,10 +44,13 @@ PANDAS_BY_DESIGN = {
 }
 # queries where a cartesian against a broadcast side is the algorithm
 BROADCAST_NLJ_BY_DESIGN = {
-    "semantic_dedup_scaled_bcast", # broadcast ONE-ROW centroid relation
-                                   # (the k~sqrt(N) data path: BNLJ against
-                                   # a single row IS the design; similarity
+    "semantic_dedup_scaled_bcast", # one-row centroid relation (BNLJ against
+                                   # a single row IS the design; same plan
+                                   # as semantic_dedup_scaled; similarity
                                    # .py::_centroids_relation)
+    "topic_doc_assignment",        # one-row centroid relation
+    "similarity_ivf_topk",         # one-row centroid relation
+    "similarity_ivfpq_topk",       # one-row centroid relation
     "range_join_value_tiers",      # 3-row tier bounds table
     "kmv_overlap_matrix",          # group-pair cross product of the DISTINCT
                                    # group list (G rows, G=5 event types);

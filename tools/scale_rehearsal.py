@@ -52,9 +52,9 @@ DEFAULT_QUERIES = [
     # 1.03, 133.8 s at 30x; its docstring says so) and measuring it every
     # round re-buys a known number; pass it explicitly to re-measure.
     "semantic_dedup_scaled",
-    # r12: the forced broadcast-centroid path (the true k ~ sqrt(N) plan
-    # shape; see operators/similarity.py LITERAL_CENTROID_MAX) rehearsed
-    # alongside, so the data path carries its own exponent receipt
+    # r12 forced the broadcast-centroid plan here; every centroid
+    # assignment now takes it, so this runs semantic_dedup_scaled's plan
+    # (kept so its exponent receipts stay comparable)
     "semantic_dedup_scaled_bcast",
     "dedup_clusters",
     "dedup_clusters_star",

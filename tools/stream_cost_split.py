@@ -106,7 +106,7 @@ elif family == "semdedup":
         F.col("rid").alias("vec_id"),
         F.expr(seq_expr).alias("embedding"),
     )
-    st.run_incremental_semdedup(vecs, store, out, checkpoint=ckpt, centroids=cents, threshold=0.95, centroid_path="data")
+    st.run_incremental_semdedup(vecs, store, out, checkpoint=ckpt, centroids=cents, threshold=0.95)
 else:
     raise SystemExit(f"unknown family {{family}}")
 wall = round(time.time() - t0, 3)
